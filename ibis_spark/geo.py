@@ -38,6 +38,7 @@ doubles — no libm, no UDF, scan-only plans.
 from __future__ import annotations
 
 import math
+import threading
 
 import pyspark.sql.functions as F
 
@@ -547,8 +548,106 @@ def _let(val, body):
     Catalyst rule re-inlines it). Nesting is safe: PySpark names every
     lambda variable "x"/"y" but Spark assigns each a unique suffix at
     construction (``lambda x_9#37`` in plans), so shadowing cannot
-    happen."""
-    return F.element_at(F.transform(F.array(val), body), 1)
+    happen.
+
+    KERNEL CACHE: building a body costs one py4j round trip per Column
+    call (~10 more each for pyspark 4.1's call-site capture), and the
+    decoded measure bodies are hundreds of calls that every geo op
+    rebuilt.  A body whose closure (and defaults) hold only plain
+    constants or other such functions builds the same JVM
+    LambdaFunction every time, so it is built ONCE per live
+    SparkContext (key: code object + closure values, _kernel_key) and
+    the cached lambda is reused for every later binding.  Sharing it is
+    safe because such a body references no variable but its own: its
+    lambda variable is resolved per occurrence, inside that
+    occurrence's scope.  A body that captures a Column (typically an
+    outer lambda variable, or the bound value's siblings) is NEVER
+    cached — the captured Column is part of the tree it builds, so a
+    cached lambda would silently return another row's (or another
+    scope's) expression.  Such bodies, Spark Connect, and a stopped
+    context take the uncached path."""
+    hit = _kernel(body)
+    if hit is None:
+        return F.element_at(F.transform(F.array(val), body), 1)
+    from pyspark.sql import Column as _SparkColumn
+    from pyspark.sql.classic.column import _to_seq
+
+    sc, lam = hit
+    jc = sc._jvm.PythonSQLUtils.fn(
+        "transform", _to_seq(sc, [F.array(val)._jc, lam])
+    )
+    return F.element_at(_SparkColumn(jc), 1)
+
+
+# Per-SparkContext kernel cache cap: keys include constant parameters
+# (tolerances, field names), so distinct values must not grow it
+# without bound — the oldest entry is dropped first.
+_KERNEL_CAP = 512
+_KERNEL_CONST = (type(None), bool, int, str, bytes)
+_KERNEL_LOCK = threading.Lock()
+
+
+def _kernel_key(v, depth: int = 0):
+    """Hashable identity of what a lambda body builds — its code object
+    plus the keys of its closure cells and defaults — or None when any
+    of them is not a plain constant (exact type, so 1, 1.0 and True
+    stay apart; floats by repr, so -0.0 and 0.0 do too), a tuple of
+    such, or a function with a key of its own."""
+    import types
+
+    if type(v) is float:
+        return (float, repr(v))
+    if type(v) in _KERNEL_CONST:
+        return (type(v), v)
+    if depth > 8:
+        return None
+    if type(v) is tuple:
+        vals, head = v, tuple
+    elif isinstance(v, types.FunctionType):
+        vals = list(v.__defaults__ or ())
+        vals += sorted((v.__kwdefaults__ or {}).items())
+        for cell in v.__closure__ or ():
+            try:
+                vals.append(cell.cell_contents)
+            except ValueError:  # unassigned cell (a def naming itself)
+                return None
+        head = v.__code__
+    else:
+        return None
+    keys = [head]
+    for x in vals:
+        k = _kernel_key(x, depth + 1)
+        if k is None:
+            return None
+        keys.append(k)
+    return tuple(keys)
+
+
+def _kernel(body):
+    """(SparkContext, cached JVM LambdaFunction) for a cacheable
+    ``body`` on a live classic SparkContext, else None.  The cache is
+    an attribute of the SparkContext object, so a restarted context
+    (new gateway, new JVM objects) starts empty."""
+    from pyspark import SparkContext
+    from pyspark.sql.utils import is_remote
+
+    sc = SparkContext._active_spark_context
+    if sc is None or sc._jsc is None or is_remote():
+        return None
+    key = _kernel_key(body)
+    if key is None:
+        return None
+    cache = sc.__dict__.setdefault("_ibis_spark_kernels", {})
+    lam = cache.get(key)
+    if lam is None:
+        from pyspark.sql.functions.builtin import _create_lambda
+
+        lam = _create_lambda(body)  # outside the lock: bodies nest
+        with _KERNEL_LOCK:
+            while len(cache) >= _KERNEL_CAP:
+                cache.pop(next(iter(cache)))
+            cache[key] = lam
+    return sc, lam
 
 
 def _hexle_double(h, o: int):
@@ -3927,9 +4026,10 @@ def _dec_area(d):
     # first ring after each separator is that member's outer (+), the
     # rest are holes (-)
     def mp_step(a, P):
-        piece = F.when(
-            a["first"], F.abs(_d_ring_shoelace(P)) / F.lit(2.0)
-        ).otherwise(-F.abs(_d_ring_shoelace(P)) / F.lit(2.0))
+        # one shoelace fold, signed after: x * +-1.0 and the halving
+        # are exact, so this is bit-identical to folding in both arms
+        sign = F.when(a["first"], F.lit(1.0)).otherwise(F.lit(-1.0))
+        piece = sign * (F.abs(_d_ring_shoelace(P)) / F.lit(2.0))
         return F.when(
             F.size(P) == 0,
             F.struct(F.lit(True).alias("first"), a["tot"].alias("tot")),
@@ -7420,14 +7520,22 @@ def _setop_batch(a, b, op: str, gtype_hint=None):
     )
 
 
-def _flat_geom_cols(dg, tag: str):
+def _flat_geom_cols(tag: str):
     """FLAT staging columns (gtype + flattened coordinate arrays +
-    per-part lengths) of a decoded geometry expression, for feeding a
-    mapInPandas kernel.  NOT the decoded struct: Spark 4.1's
-    mapInPandas INPUT conversion np.array()'s nested arrays and dies
-    on any RAGGED row — differing ring lengths or the multipolygon
-    separator encoding's empty parts (probed r14); array<double> of
-    any length is one level deep and always safe."""
+    per-part lengths) of the decoded geometry staged as column
+    ``__d{tag}``, for feeding a mapInPandas kernel.  NOT the decoded
+    struct: Spark 4.1's mapInPandas INPUT conversion np.array()'s
+    nested arrays and dies on any RAGGED row — differing ring lengths
+    or the multipolygon separator encoding's empty parts (probed r14);
+    array<double> of any length is one level deep and always safe.
+
+    SINGLE STAGING: the four columns read the decoded geometry four
+    times, so they are projected from the staged column, never from
+    the geometry expression itself — one copy of a constructor in the
+    plan instead of four (analysis, planning and execution each paid
+    4x for it).  CollapseProject keeps the staged projection, as it
+    never inlines a non-trivial expression into several references."""
+    dg = F.col(f"__d{tag}")
     return [
         dg["gtype"].alias(f"__gt{tag}"),
         F.flatten(
@@ -7442,6 +7550,30 @@ def _flat_geom_cols(dg, tag: str):
         ).alias(f"__ys{tag}"),
         F.transform(dg["parts"], F.size).alias(f"__ln{tag}"),
     ]
+
+
+def _stage_flat(df, keep, geoms, extra=None):
+    """The one input projection of a batch kernel: ``df``'s ``keep``
+    columns, the flat staging columns (_flat_geom_cols) of each
+    ``(tag, geometry)`` in ``geoms``, and the ``extra`` {name: Column}
+    columns.  Each geometry is decoded into ``__d{tag}`` by one
+    projection and flattened by the next — single staging."""
+    extra = extra or {}
+
+    def dec(g):
+        d = _dec_of(g)
+        return d if d is not None else _decode_struct(unwrap(g))
+
+    decoded = df.select(
+        *[F.col(c) for c in keep],
+        *[dec(g).alias(f"__d{tag}") for tag, g in geoms],
+        *[c.alias(n) for n, c in extra.items()],
+    )
+    return decoded.select(
+        *[F.col(c) for c in keep],
+        *[c for tag, _g in geoms for c in _flat_geom_cols(tag)],
+        *[F.col(n) for n in extra],
+    )
 
 
 def _flat_rebuild(gt, xs, ys, lens):
@@ -7498,7 +7630,8 @@ def geo_setops_batch(
     mapInPandas is a plan NODE, not an expression: there is no
     extraction step to lose.
 
-    Scale shape: one narrow projection + one batch-streamed Python
+    Scale shape: one narrow input projection (each geometry staged
+    ONCE, then flattened — _stage_flat) + one batch-streamed Python
     pass; per-row independent, no shuffle, no state.  ``keep`` should
     name only the columns the caller needs downstream — everything
     listed rides through the Python worker.
@@ -7513,7 +7646,8 @@ def geo_setops_batch(
 def geo_setops_batch_multi(t, groups, *, keep=None):
     """Several independent set-op PAIRS in one Arrow-batched pass —
     ``groups`` is an iterable of ``(a, b, ops, names)``.  All pairs
-    stage into ONE projection (flat columns, _flat_geom_cols) and run
+    stage into ONE input projection (_stage_flat: each geometry
+    decoded once, then flattened) and run
     through ONE mapInPandas stage; the per-stage Arrow/plan overhead
     (~0.7 s at sf0.1 row counts, measured r14) is paid once instead
     of once per pair.  Same kernels, same NULL posture, same result
@@ -7527,10 +7661,6 @@ def geo_setops_batch_multi(t, groups, *, keep=None):
     df = t.df if hasattr(t, "df") else t
     if keep is None:
         keep = list(df.columns)
-
-    def _dec_expr(g):
-        d = _dec_of(g)
-        return d if d is not None else _decode_struct(unwrap(g))
 
     norm = []
     all_names = []
@@ -7555,11 +7685,10 @@ def geo_setops_batch_multi(t, groups, *, keep=None):
             "pass names= to rename"
         )
 
-    staged_cols = [F.col(c) for c in keep]
+    geoms = []
     for gi, (a, b, _ops, _names) in enumerate(norm):
-        staged_cols += _flat_geom_cols(_dec_expr(a), f"{gi}a")
-        staged_cols += _flat_geom_cols(_dec_expr(b), f"{gi}b")
-    staged = df.select(*staged_cols)
+        geoms += [(f"{gi}a", a), (f"{gi}b", b)]
+    staged = _stage_flat(df, keep, geoms)
     dtypes = {f.name: f.dataType.simpleString() for f in staged.schema}
     out_schema = ", ".join(
         [f"`{c}` {dtypes[c]}" for c in keep]
@@ -7613,8 +7742,9 @@ def geo_buffer_batch(t, g, radius, *, quad_segs: int = 8, keep=None,
     Conservative NULLs: collinear/reversal joints, zero-length
     segments, radii too large for an inner trim, non-convex erosions
     the offset walk can't certify, interacting grown holes.  Same
-    mapInPandas shape as geo_setops_batch: one narrow projection,
-    one batch-streamed pass, per-row independent, no shuffle."""
+    mapInPandas shape as geo_setops_batch: one narrow input projection
+    (each geometry staged once), one batch-streamed pass, per-row
+    independent, no shuffle."""
     return geo_buffer_batch_multi(
         t, [(g, radius, name)], quad_segs=quad_segs, keep=keep
     )
@@ -7623,9 +7753,11 @@ def geo_buffer_batch(t, g, radius, *, quad_segs: int = 8, keep=None,
 def geo_buffer_batch_multi(t, groups, *, quad_segs: int = 8, keep=None):
     """Several independent buffers in one Arrow-batched pass —
     ``groups`` is an iterable of ``(g, radius, name)``.  All inputs
-    stage into ONE projection as FLAT columns (gtype + flattened
+    stage into ONE input projection as FLAT columns (gtype + flattened
     coordinate arrays + per-part lengths — _flat_geom_cols: the
-    decoded-struct staging dies on ragged rows, probed r14) and run
+    decoded-struct staging dies on ragged rows, probed r14), each
+    geometry decoded once and flattened from there (_stage_flat), and
+    run
     through ONE mapInPandas stage, paying the per-stage Arrow/plan
     overhead once instead of once per buffer.  Same kernel, NULL
     posture, and result encoding as geo_buffer_batch."""
@@ -7641,10 +7773,6 @@ def geo_buffer_batch_multi(t, groups, *, quad_segs: int = 8, keep=None):
     if keep is None:
         keep = list(df.columns)
 
-    def _dec_expr(gg):
-        d = _dec_of(gg)
-        return d if d is not None else _decode_struct(unwrap(gg))
-
     names = [name for _g, _r, name in groups]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate result names: {names!r}")
@@ -7654,17 +7782,16 @@ def geo_buffer_batch_multi(t, groups, *, quad_segs: int = 8, keep=None):
             f"result names {sorted(clash)!r} collide with keep columns; "
             "pass different names"
         )
-    staged_cols = [F.col(c) for c in keep]
+    geoms, radii = [], {}
     for gi, (g, radius, _name) in enumerate(groups):
         rr = unwrap(radius)
-        rr = (
+        radii[f"__r{gi}"] = (
             rr.cast("double")
             if hasattr(rr, "cast")
             else F.lit(float(radius))
         )
-        staged_cols += _flat_geom_cols(_dec_expr(g), str(gi))
-        staged_cols.append(rr.alias(f"__r{gi}"))
-    staged = df.select(*staged_cols)
+        geoms.append((str(gi), g))
+    staged = _stage_flat(df, keep, geoms, radii)
     dtypes = {f.name: f.dataType.simpleString() for f in staged.schema}
     out_schema = ", ".join(
         [f"`{c}` {dtypes[c]}" for c in keep]

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -51,3 +52,32 @@ def orders(con, sf_dir):
 @pytest.fixture(scope="session")
 def customer(con, sf_dir):
     return con.read_parquet(f"{sf_dir}/customer.parquet")
+
+
+@contextmanager
+def _count_py4j():
+    """Count the py4j commands sent inside the block.  py4j's
+    object-release commands (``m\\nd\\n...``) are left out, as in
+    perfbench/tracing.py: the garbage collector sends them at
+    unpredictable moments, so identical builds would count differently."""
+    from py4j.clientserver import ClientServerConnection
+
+    original = ClientServerConnection.send_command
+    counted = {"calls": 0}
+
+    def send_command(conn, command):
+        if not command.startswith("m\nd\n"):
+            counted["calls"] += 1
+        return original(conn, command)
+
+    ClientServerConnection.send_command = send_command
+    try:
+        yield counted
+    finally:
+        ClientServerConnection.send_command = original
+
+
+@pytest.fixture
+def count_py4j():
+    """``with count_py4j() as n: ...`` then ``n["calls"]``."""
+    return _count_py4j

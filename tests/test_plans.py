@@ -423,3 +423,40 @@ def test_repartitioned_entries_spread_the_scan(plans):
         "geo_buffer_report",
     ):
         assert "RoundRobinPartitioning" in plans(name), name
+
+
+def test_batch_kernels_stage_each_geometry_once(con):
+    """geo_setops_batch and geo_buffer_batch decode each input geometry
+    into ONE staged column and flatten from there: the analyzed plan
+    holds one copy of each decoded=True constructor, not one per flat
+    staging column (four); zip_with marks the constructor's rings."""
+    import ibis_spark as ib
+    from ibis_spark import geo
+
+    t = con.memtable([(1,)], schema={"i": "int64"})
+    z = (t.i - t.i).cast("float64")
+    a = geo.geo_polygon(
+        ib.array(z, z + 4.0, z + 4.0, z), ib.array(z, z, z + 4.0, z + 4.0),
+        decoded=True,
+    )
+    b = geo.geo_polygon(
+        ib.array(z + 2.0, z + 6.0, z + 6.0, z + 2.0),
+        ib.array(z, z, z + 4.0, z + 4.0),
+        decoded=True,
+    )
+
+    def copies(out):
+        p = out.df._jdf.queryExecution().analyzed().toString()
+        return p.count("zip_with")
+
+    one = copies(t.select(g=a))
+    assert one >= 1
+    setops = geo.geo_setops_batch(t, a, b, keep=["i"])
+    assert copies(setops) == 2 * one
+    buffered = geo.geo_buffer_batch(t, a, 1.0, keep=["i"])
+    assert copies(buffered) == one
+    r = setops.select(
+        ia=geo.geo_area(setops["intersection"]),
+        ua=geo.geo_area(setops["union"]),
+    ).df.collect()[0]
+    assert (r.ia, r.ua) == (8.0, 24.0)
