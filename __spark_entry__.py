@@ -13,7 +13,6 @@ DataFrame calls except the final ``.to_spark()`` handoff).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,24 +25,14 @@ _TABLES = (
 ).split()
 
 
-_SCHEMA_CACHE: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str):
     # epoch/unix conversions assume UTC wall time, matching DuckDB's
     # treatment of naive timestamps — enforce regardless of driver session
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # SCHEMA memoized per (session, dir, table) — r13: schema INFERENCE
-    # (`spark.read.parquet` with no schema) fires a footer-reading job
-    # on EVERY call, which tripped bench.py's construction-probe (meant
-    # to catch driver-side iterative work) and silently flipped
-    # pure-expression queries into per-rep-construct timing, charging
-    # ~2-4 s of py4j plan-BUILD per rep to entries whose execution is
-    # ~1.5 s.  A schema-supplied read fires NO job (probed).  Only the
-    # schema is cached — each call still builds a FRESH DataFrame:
-    # memoizing the DataFrame itself made every self-join reference the
-    # same plan, failing Spark's ambiguous-self-join check (q8) and
-    # degrading q21's plan 8x.
+    # read_parquet takes the schema from the file footer (no Spark job)
+    # and each call builds a FRESH DataFrame: one shared DataFrame would
+    # make every self-join reference the same plan, failing Spark's
+    # ambiguous-self-join check (q8) and degrading q21's plan 8x.
     if sf_dir.startswith("catalog:"):
         # "catalog:<prefix>" reads registered tables "<prefix><name>"
         # instead of parquet paths — the bucketed-fixture path
@@ -57,28 +46,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str):
         tn = sf_dir[len("catalog:"):] + name
         spark.catalog.refreshTable(tn)
         return ib.Table(spark.table(tn))
-    path = f"{sf_dir}/{name}.parquet"
-    # Key by applicationId (stable per session, unlike id(spark) which
-    # CPython reuses after GC) + file mtime (a regenerated file with a
-    # different schema at the same path must not be served stale).
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        from ibis_spark import _nanos_timestamp_cols
-
-        t = ib.connect(spark).read_parquet(path)
-        # TIMESTAMP(NANOS) tables go through read_parquet's rebuild
-        # every call — the captured schema is post-rebuild and would
-        # mis-read the raw file
-        _SCHEMA_CACHE[key] = (
-            t.df.schema if not _nanos_timestamp_cols(path) else None
-        )
-        return t
-    return ib.Table(spark.read.schema(sch).parquet(path))
+    return ib.connect(spark).read_parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

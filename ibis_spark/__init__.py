@@ -310,15 +310,36 @@ class Backend:
         return Table(self._session.table(name))
 
     def read_parquet(self, path, table_name: Optional[str] = None) -> Table:
+        """Parquet source (PB:838): a file or a directory of files.
+
+        A single local file opens with no Spark job.  pyarrow reads its
+        footer once and the reader is handed the schema Spark's own
+        inference returns for that file: each column's parquet type
+        mapped as Spark maps it, under the session's
+        ``spark.sql.parquet.binaryAsString``, ``int96AsTimestamp`` and
+        ``inferTimestampNTZ.enabled``.  Spark still infers the schema, at
+        one job per read, for directories, globs and non-local paths,
+        files Spark wrote (their footer carries Spark's own schema),
+        nested columns other than a list of primitives, parquet types
+        outside that mapping, and footers pyarrow cannot read.
+
+        Spark reads parquet TIMESTAMP(NANOS) only as raw int64 (the
+        legacy ``nanosAsLong`` conf); such columns come back rebuilt as
+        TimestampNTZ, floored to the microsecond, from epoch micros via
+        interval arithmetic: exact and session-tz-free.  The conf must
+        hold whenever the table's plan runs, so reading such a file sets
+        ``spark.sql.legacy.parquet.nanosAsLong=true`` on the session and
+        leaves it set: a later plain ``spark.read.parquet`` of a NANOS
+        file in that session returns bigint instead of failing."""
         if self._mode == "streaming":
             raise NotImplementedError("use read_parquet_dir for streaming mode")
-        nanos = _nanos_timestamp_cols(path)
+        sch, nanos = _parquet_footer(self._session, path)
         if nanos:
-            # Spark cannot read parquet TIMESTAMP(NANOS) natively; read the
-            # raw int64 (legacy conf) and rebuild a TimestampNTZ from epoch
-            # micros via interval arithmetic — exact and session-tz-free.
             self._session.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = self._session.read.parquet(str(path))
+        reader = self._session.read
+        if sch is not None:
+            reader = reader.schema(sch)
+        df = reader.parquet(str(path))
         if nanos:
             from pyspark.sql import functions as F
 
@@ -328,7 +349,8 @@ class Backend:
                     epoch
                     + F.expr(
                         f"make_dt_interval(0, 0, 0, "
-                        f"CAST(`{c}` div 1000 AS DECIMAL(20,0)) / 1000000)"
+                        f"CAST((`{c}` - pmod(`{c}`, 1000)) div 1000 AS DECIMAL(20,0))"
+                        f" / 1000000)"
                     )
                 ).alias(c)
                 if c in nanos
@@ -681,45 +703,122 @@ def _apply_watermark(df, watermark):
     return df.withWatermark(col, delay)
 
 
-def _nanos_timestamp_cols(path) -> set[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — read from the footer
-    (one tiny metadata IO, no data scan) so read_parquet can shim them."""
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_footer(session, path):
+    """Read the parquet footer at ``path`` once with pyarrow (metadata IO
+    only, no data scan).  Returns ``(schema, nanos)``: the StructType
+    Spark's inference gives the file, or None where Spark must infer it;
+    and the names of the top-level INT64 TIMESTAMP(NANOS) columns (for a
+    directory, those of its first file), which read_parquet rebuilds."""
+    import builtins
+    import functools
+    import json
     import os
 
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:
-        return set()
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     p = str(path)
+    single = os.path.isfile(p)
     if os.path.isdir(p):
         files = sorted(
             f for f in os.listdir(p) if f.endswith(".parquet") and not f.startswith("_")
         )
         if not files:
-            return set()
+            return None, set()
         p = os.path.join(p, files[0])
+    elif not single:
+        return None, set()
     try:
-        pf = pq.ParquetFile(p)
-        sch = pf.schema_arrow
-        # pyarrow reports Spark's legacy INT96 timestamps as unit="ns"
-        # too, but Spark reads INT96 natively — the nanosAsLong shim is
-        # only for real INT64 TIMESTAMP(NANOS) columns (applying it to
-        # an INT96 column would feed `div` a TIMESTAMP and break the
-        # read). Distinguish via the parquet physical type.
-        phys = {
-            pf.schema.column(i).name: pf.schema.column(i).physical_type
-            for i in range(len(pf.schema))
-        }
-    except Exception:
-        return set()
-    return {
-        f.name
-        for f in sch
-        if pa.types.is_timestamp(f.type)
-        and f.type.unit == "ns"
-        and phys.get(f.name) != "INT96"
+        with pq.ParquetFile(p) as pf:
+            leaves = [pf.schema.column(i) for i in builtins.range(pf.metadata.num_columns)]
+            types = [json.loads(c.logical_type.to_json()) for c in leaves]
+            spark_written = _SPARK_SCHEMA_KEY in (pf.metadata.metadata or {})
+            arrow = pf.schema.to_arrow_schema()
+    except (OSError, ValueError, pa.ArrowException):
+        return None, set()
+    nanos = {
+        c.name
+        for c, lt in zip(leaves, types)
+        # a leaf whose path is its own name and never repeats is a
+        # top-level column; the others sit inside a group
+        if c.path == c.name
+        and c.max_repetition_level == 0
+        and c.physical_type == "INT64"
+        and lt.get("timeUnit") == "nanoseconds"
     }
+    # Spark's inference returns the schema a Spark-written footer stores,
+    # which the type mapping below need not reproduce
+    if not single or spark_written:
+        return None, nanos
+    from pyspark.sql import types as st
+
+    @functools.cache
+    def conf(key):
+        return session.conf.get(f"spark.sql.parquet.{key}").lower() == "true"
+
+    fields = []
+    # a primitive, or a list of primitives, holds exactly one leaf: the
+    # walk stays aligned with the leaves up to the first other nested type
+    for f, c, lt in zip(arrow, leaves, types):
+        if not pa.types.is_nested(f.type):
+            t = st.LongType() if f.name in nanos else _parquet_leaf_type(c, lt, conf)
+        elif (
+            pa.types.is_list(f.type) or pa.types.is_large_list(f.type)
+        ) and not pa.types.is_nested(f.type.value_type):
+            t = _parquet_leaf_type(c, lt, conf)
+            t = None if t is None else st.ArrayType(t, True)
+        else:
+            t = None
+        if t is None:
+            return None, nanos
+        # file sources read every column as nullable (asNullable)
+        fields.append(st.StructField(f.name, t, True))
+    return st.StructType(fields), nanos
+
+
+def _parquet_leaf_type(col, lt, conf):
+    """The Spark type Spark's parquet schema converter gives the flat
+    column ``col`` of logical type ``lt`` (pyarrow's JSON form), or None
+    for a type outside this table.  ``conf(key)`` reads the boolean
+    session setting ``spark.sql.parquet.<key>``."""
+    from pyspark.sql import types as st
+
+    phys, kind = col.physical_type, lt["Type"]
+    if kind == "None":
+        if phys == "BYTE_ARRAY":
+            return st.StringType() if conf("binaryAsString") else st.BinaryType()
+        if phys == "INT96":
+            return st.TimestampType() if conf("int96AsTimestamp") else None
+        plain = {
+            "BOOLEAN": st.BooleanType,
+            "INT32": st.IntegerType,
+            "INT64": st.LongType,
+            "FLOAT": st.FloatType,
+            "DOUBLE": st.DoubleType,
+        }.get(phys)
+        return plain() if plain else None
+    if kind == "Decimal":
+        return st.DecimalType(col.precision, col.scale) if col.precision <= 38 else None
+    if kind == "String" and phys == "BYTE_ARRAY":
+        return st.StringType()
+    if kind == "Date" and phys == "INT32":
+        return st.DateType()
+    if kind == "Int" and lt["isSigned"]:
+        signed = {
+            ("INT32", 8): st.ByteType,
+            ("INT32", 16): st.ShortType,
+            ("INT32", 32): st.IntegerType,
+            ("INT64", 64): st.LongType,
+        }.get((phys, lt["bitWidth"]))
+        return signed() if signed else None
+    if kind == "Timestamp" and phys == "INT64" and lt["timeUnit"] != "nanoseconds":
+        if lt["isAdjustedToUTC"] or not conf("inferTimestampNTZ.enabled"):
+            return st.TimestampType()
+        return st.TimestampNTZType()
+    return None
 
 
 def _as_spark_schema(s):
