@@ -3005,7 +3005,7 @@ def _geo_envelope_box(spark, sf_dir):
     )
     n = n.mutate(poly=poly)
     # ONE bbox walk via geo_bbox instead of four scalar accessors: the
-    # x_min..y_max accessors share _bbox_struct verbatim (field reads of
+    # x_min..y_max accessors share the _dec_bbox fold verbatim (field reads of
     # this same struct — unit-tested individually), and four copies of
     # the walk tree cost ~12 s of py4j expression BUILD time alone
     n = n.mutate(env=geo.geo_envelope(n.poly), b=geo.geo_bbox(n.poly))

@@ -259,24 +259,6 @@ def _hex16_expr(xcol):
     )
 
 
-def _double_from_hex16(h):
-    """Inverse of _hex16_expr: split the image into the 12 sign/exponent
-    bits and 52 mantissa bits via conv(), rebuild with exact
-    power-of-two scaling. NULL for exponents outside the encode domain
-    (never garbage on foreign WKB)."""
-    top12 = F.conv(F.substring(h, 1, 3), 16, 10).cast("int")
-    m52 = F.conv(F.substring(h, 4, 13), 16, 10).cast("bigint")
-    sign = F.when(top12 >= 2048, F.lit(-1.0)).otherwise(F.lit(1.0))
-    e = ((top12 % 2048) - F.lit(1023)).cast("int")
-    f = F.lit(1.0) + m52.cast("double") / F.lit(_P52)
-    return (
-        F.when(h.isNull(), F.lit(None).cast("double"))
-        .when(h == _ZERO16, F.lit(0.0))
-        .when((e < -61) | (e > 61), F.lit(None).cast("double"))
-        .otherwise(sign * (f * _pow2(e)))
-    )
-
-
 def _wkb_double(wkb, pos: int):
     """Decode the little-endian 8-byte double starting at 1-based byte
     ``pos`` of a WKB binary column — exact, and DELIBERATELY frugal with
@@ -299,7 +281,7 @@ def _wkb_double(wkb, pos: int):
 
     Zero (+0 image) decodes to 0.0; denormals/NaN/Inf/-0 and any
     exponent outside the exact domain [-61, 61] decode to NULL, exactly
-    as _double_from_hex16 does.  NULL wkb propagates to NULL through
+    as _hexle_double does.  NULL wkb propagates to NULL through
     the arithmetic (all conditions become NULL -> otherwise -> NULL).
 
     r10: the hexed slice is LET-BOUND (_let) so ``wkb`` is referenced
@@ -495,8 +477,8 @@ def geo_within_bbox(pt, xmin, ymin, xmax, ymax):
 # compiler); this is a pure-Spark expressible subset: single- and
 # multi-ring (holes) polygons as standard WKB (LE, geometry type 3),
 # point-in-polygon by even-odd ray casting, area by the shoelace
-# formula — all JVM-side higher-order functions over the raw bytes, no
-# UDF, no GEOS.
+# formula — JVM-side higher-order functions over the decoded form (see
+# the decode-once section), no UDF, no GEOS.
 
 
 def _le_uint32(wkb, pos):
@@ -877,17 +859,14 @@ def geo_polygon(xs, ys, holes=(), *, decoded: bool = False):
 
 
 def geo_contains(poly, pt):
-    """True when a WKB point lies in the INTERIOR of a WKB polygon —
-    reference GeoContains/GeoWithin (point-in-polygon case), PostGIS
-    even-odd semantics: interior rings (holes) subtract, so a point
-    inside a hole is NOT contained.
+    """True when a point lies in the INTERIOR of a polygon — reference
+    GeoContains/GeoWithin (point-in-polygon case), PostGIS even-odd
+    semantics: interior rings (holes) subtract, so a point inside a
+    hole is NOT contained.
 
-    Even-odd RAY CAST, entirely in JVM expressions: iterate the ring
-    directory with an aggregate over the ring indices (ring offsets are
-    data-dependent prefix sums, carried in the accumulator), and for
-    each ring count ray crossings with an inner aggregate over its edge
-    indices. The crossing test is the multiply form of PNPOLY —
-    ``(px-x1)*dy <vs> (x2-x1)*(py-y1)`` with the comparison direction
+    Even-odd RAY CAST over every ring edge of the decoded polygon
+    (_dec_ray_cast).  The crossing test is the multiply form of PNPOLY
+    — ``(px-x1)*dy <vs> (x2-x1)*(py-y1)`` with the comparison direction
     following sign(dy) — which avoids division entirely (no ANSI
     div-by-zero hazard on horizontal edges, and products of
     integer-valued coordinates are exact in FP, so oracle parity is
@@ -895,179 +874,33 @@ def geo_contains(poly, pt):
     follow the half-open ray-cast convention and are not guaranteed
     either way — same caveat every FP point-in-polygon carries.
 
-    NULL when the polygon is not LE geometry-type-3 WKB (foreign/BE
-    bytes degrade to NULL, never garbage — same gate as the point
-    codec), or the point is NULL/invalid. Scan-only: no join, no
-    shuffle, no UDF; cost is O(total vertices) per row.
-
-    PLAN SIZE: the walk is LET-BOUND throughout (_let) — the point
-    decode binds once per row, each edge's 32-byte slice is hexed once
-    and its four doubles bind once, and each ring's vertex count binds
-    once. The naive spelling re-expanded each subtree at every use site
-    and cost ~4 s of analyzer/optimizer time PER QUERY (25-row input!);
-    this shape is a few hundred nodes."""
-    dp, dq = _dec_of(poly), _dec_of(pt)
-    if dp is not None or dq is not None:
-        dpoly = dp if dp is not None else _decode_struct(unwrap(poly))
-        dpt = dq if dq is not None else _decode_struct(unwrap(pt))
-        return wrap(
-            _let(
-                F.struct(dpoly.alias("a"), dpt.alias("b")),
-                lambda s: _dec_contains(s["a"], s["b"]),
-            )
-        )
-    u, p = unwrap(poly), unwrap(pt)
-
-    def walk(px, py):
-        def edge_step(ecnt, ei, off):
-            def with_v(v):
-                x1, y1 = v["x1"], v["y1"]
-                x2, y2 = v["x2"], v["y2"]
-                dy = y2 - y1
-                straddles = (y1 > py) != (y2 > py)
-                lhs = (px - x1) * dy
-                rhs = (x2 - x1) * (py - y1)
-                crosses = straddles & F.when(dy > 0, lhs < rhs).otherwise(
-                    lhs > rhs
-                )
-                # an undecodable vertex (out-of-codec-domain foreign
-                # bytes) poisons the count to NULL rather than reading
-                # as "no crossing" — degrade-to-NULL, never a wrong
-                # parity (3VL alone can't do this: NULL & FALSE = FALSE
-                # would silently skip the edge).
-                bad = (
-                    x1.isNull() | y1.isNull() | x2.isNull() | y2.isNull()
-                )
-                return ecnt + F.when(
-                    bad, F.lit(None).cast("bigint")
-                ).when(crosses, F.lit(1).cast("bigint")).otherwise(
-                    F.lit(0).cast("bigint")
-                )
-
-            def with_hex(h):
-                return _let(
-                    F.struct(
-                        _hexle_double(h, 0).alias("x1"),
-                        _hexle_double(h, 16).alias("y1"),
-                        _hexle_double(h, 32).alias("x2"),
-                        _hexle_double(h, 48).alias("y2"),
-                    ),
-                    with_v,
-                )
-
-            return _let(
-                F.hex(F.substring(u, (off + 4 + 16 * ei).cast("int"), 32)),
-                with_hex,
-            )
-
-        def ring_step(racc, ri):
-            off = racc["off"]
-            return _let(
-                _le_uint32(u, off),
-                lambda npts: F.struct(
-                    (off + 4 + 16 * npts).alias("off"),
-                    (
-                        racc["cr"]
-                        + F.aggregate(
-                            _seq0(npts - 1),
-                            F.lit(0).cast("bigint"),
-                            lambda ecnt, ei: edge_step(ecnt, ei, off),
-                        )
-                    ).alias("cr"),
-                ),
-            )
-
-        init = F.struct(
-            F.lit(10).cast("bigint").alias("off"),
-            F.lit(0).cast("bigint").alias("cr"),
-        )
-        res = F.aggregate(_seq0(_le_uint32(u, 6)), init, ring_step)
-        inside = (res["cr"] % 2) == 1
-        hdr_ok = F.substring(u, 1, 5) == F.lit(_POLY_HDR)
-        return F.when(
-            hdr_ok & px.isNotNull() & py.isNotNull(), inside
-        ).otherwise(F.lit(None).cast("boolean"))
-
+    Either side may be WKB (decoded once, _as_dec) or decoded.  NULL
+    unless the first is a polygon and the second a point, and for
+    input the decoder refuses (foreign/BE bytes, out-of-domain
+    coordinates).  Scan-only: no join, no shuffle, no UDF; cost is
+    O(total vertices) per row."""
     return wrap(
         _let(
-            F.struct(
-                _pt_double(p, 6).alias("x"), _pt_double(p, 14).alias("y")
-            ),
-            lambda q: walk(q["x"], q["y"]),
+            F.struct(_as_dec(poly).alias("a"), _as_dec(pt).alias("b")),
+            lambda s: _dec_contains(s["a"], s["b"]),
         )
     )
 
 
 def geo_area(poly):
-    """Planar area of a WKB polygon — reference GeoArea, PostGIS
-    ST_Area semantics: outer-ring area minus the area of every interior
-    ring (hole), winding-direction INSENSITIVE (each ring's shoelace
-    sum is taken in absolute value, as PostGIS does, so clockwise and
-    counter-clockwise rings measure the same).
+    """Planar area of a polygon — reference GeoArea, PostGIS ST_Area
+    semantics: outer-ring area minus the area of every interior ring
+    (hole), winding-direction INSENSITIVE (each ring's shoelace sum is
+    taken in absolute value, as PostGIS does, so clockwise and
+    counter-clockwise rings measure the same); a multipolygon sums its
+    members.
 
-    Shoelace over each ring's closed vertex run, same let-bound
-    aggregate-over-ring-directory walk as geo_contains. With
-    integer-valued coordinates every cross product and partial sum is
-    exact in FP, so the left-to-right aggregate order matches any
-    oracle's summation order bit-for-bit. NULL on non-polygon/foreign
-    WKB."""
-    d = _dec_of(poly)
-    if d is not None:
-        return wrap(_let(d, _dec_area))
-    u = unwrap(poly)
-
-    def edge_step(s, ei, off):
-        # x1*y2 - x2*y1 from one hexed 32-byte slice
-        return _let(
-            F.hex(F.substring(u, (off + 4 + 16 * ei).cast("int"), 32)),
-            lambda h: s
-            + (
-                _hexle_double(h, 0) * _hexle_double(h, 48)
-                - _hexle_double(h, 32) * _hexle_double(h, 16)
-            ),
-        )
-
-    def ring_step(racc, ri):
-        off = racc["off"]
-
-        def with_sh(npts, sh):
-            ring_area = F.abs(sh) / F.lit(2.0)
-            signed = F.when(racc["idx"] == 0, ring_area).otherwise(
-                -ring_area
-            )
-            return F.struct(
-                (off + 4 + 16 * npts).alias("off"),
-                (racc["idx"] + F.lit(1).cast("bigint")).alias("idx"),
-                (racc["tot"] + signed).alias("tot"),
-            )
-
-        return _let(
-            _le_uint32(u, off),
-            lambda npts: _let(
-                F.aggregate(
-                    _seq0(npts - 1),
-                    F.lit(0.0),
-                    lambda s, ei: edge_step(s, ei, off),
-                ),
-                lambda sh: with_sh(npts, sh),
-            ),
-        )
-
-    init = F.struct(
-        F.lit(10).cast("bigint").alias("off"),
-        F.lit(0).cast("bigint").alias("idx"),
-        F.lit(0.0).alias("tot"),
-    )
-    res = F.aggregate(_seq0(_le_uint32(u, 6)), init, ring_step)
-    hdr_ok = F.substring(u, 1, 5) == F.lit(_POLY_HDR)
-    # multipolygon (r12): delegate through the decoded form — the new
-    # WKB type's measure IS decode-once (no second byte walk to keep in
-    # bit-parity; the decoded body is the definition)
-    return wrap(
-        F.when(hdr_ok, res["tot"])
-        .when(_is_mpoly(u), _let(_decode_struct(u), _dec_area))
-        .otherwise(F.lit(None).cast("double"))
-    )
+    One shoelace fold per ring of the decoded form (_dec_area; WKB
+    input decodes once).  With integer-valued coordinates every cross
+    product and partial sum is exact in FP, so the left-to-right fold
+    order matches any oracle's summation order bit-for-bit.  NULL for
+    other types and for input the decoder refuses."""
+    return wrap(_let(_as_dec(poly), _dec_area))
 
 
 def geo_within_join(
@@ -1314,7 +1147,31 @@ def geo_cluster(
 # GeoGeometryType / GeoCentroid / GeoFlipCoordinates / GeoAzimuth /
 # GeoIntersects (ibis/expr/operations/geospatial.py:92-497).  Same
 # discipline as the polygon slice: LE WKB only, exact IEEE codec domain,
-# let-bound byte walks, scan-only plans, degrade-to-NULL on foreign bytes.
+# scan-only plans, degrade-to-NULL on foreign bytes.
+#
+# ONE COORDINATE LOWERING.  Every fold over coordinates (area,
+# perimeter, length, bbox and the extremes, envelope, centroid,
+# contains, intersects, line_locate_point, line_substring,
+# max_distance, d_fully_within) reads WKB input by decoding it once
+# (_as_dec) and running the decoded fold; the geometry-returning ones
+# encode their decoded result back to WKB (_same_form).  Decoding
+# first beat the former per-fold byte walks on every fold (SCALE.md,
+# "One coordinate lowering": 20k stored 9-vertex rows, local[4], e.g.
+# area 6.5 -> 3.9 s, envelope 26.5 -> 5.6 s, line_locate_point
+# 26.0 -> 4.9 s).
+#
+# What stays on the bytes: readers that look at a header or a count,
+# or slice out one vertex, and never decode a coordinate run —
+# geometry_type, n_points, n_rings, start/end/point_n,
+# flip_coordinates, point x/y (and the point measures built on them).
+# A full decode costs them 8-27x on the same probe (geometry_type
+# 0.13 s on the bytes, 3.57 s through geo_decode), so each reader
+# picks its path from the input form it sees: bytes for WKB, the
+# struct for decoded input.  geo_simplify's pandas UDF stays the WKB
+# path for the same reason (0.73 s against 13.0 s on 9-vertex lines).
+# tests/test_geo_codec_callers.py keeps new byte-walk folds out: the
+# byte codec may be called only by the codec itself, the decoder and
+# these readers.
 
 _LINE_HDR = bytes.fromhex("0102000000")
 _PT_HDR = bytes.fromhex("0101000000")
@@ -1380,89 +1237,24 @@ def geo_linestring(xs, ys, *, decoded: bool = False):
     )
 
 
-def _edge_len(u, base, ei):
-    """sqrt edge length of the 32-byte vertex pair starting at 1-based
-    byte ``base + 16*ei`` (sqrt is correctly rounded, so the value is
-    deterministic given the stored bits)."""
-    return _let(
-        F.hex(F.substring(u, (base + 16 * ei).cast("int"), 32)),
-        lambda h: _let(
-            F.struct(
-                (_hexle_double(h, 32) - _hexle_double(h, 0)).alias("dx"),
-                (_hexle_double(h, 48) - _hexle_double(h, 16)).alias("dy"),
-            ),
-            lambda d: F.sqrt(d["dx"] * d["dx"] + d["dy"] * d["dy"]),
-        ),
-    )
-
-
 def geo_length(g):
-    """Length of a WKB LINESTRING (sum of segment lengths) — reference
+    """Length of a LINESTRING (sum of segment lengths) — reference
     GeoLength, PostGIS ST_Length semantics: multilinestrings sum their
     member lengths (r12), 0.0 for points/polygons and their multis
     (length is defined as zero), NULL on foreign/BE bytes.
     Left-to-right summation order, so equal-input oracle parity is
-    bit-robust.  Decoded input runs the arithmetic fold directly (no
-    byte codec — the r11 decode-once path)."""
-    d = _dec_of(g)
-    if d is not None:
-        return wrap(_let(d, _dec_length))
-    u = unwrap(g)
-    npts = _le_uint32(u, 6)
-    total = F.aggregate(
-        _seq0(npts - 1),
-        F.lit(0.0),
-        lambda s, ei: s + _edge_len(u, F.lit(10).cast("bigint"), ei),
-    )
-    return wrap(
-        F.when(_is_line(u), total)
-        .when(_is_mline(u), _let(_decode_struct(u), _dec_length))
-        .when(
-            _is_pt(u) | _is_poly(u) | _is_mpt(u) | _is_mpoly(u),
-            F.lit(0.0),
-        )
-        .otherwise(F.lit(None).cast("double"))
-    )
+    bit-robust.  An arithmetic fold over the decoded form (WKB input
+    decodes once)."""
+    return wrap(_let(_as_dec(g), _dec_length))
 
 
 def geo_perimeter(g):
-    """Perimeter of a WKB POLYGON — reference GeoPerimeter, PostGIS
+    """Perimeter of a POLYGON — reference GeoPerimeter, PostGIS
     ST_Perimeter semantics: the total boundary length INCLUDING every
-    interior ring (holes add to the perimeter), 0.0 for points and
-    linestrings, NULL on foreign bytes.  Same let-bound
-    ring-directory walk as geo_area."""
-    d = _dec_of(g)
-    if d is not None:
-        return wrap(_let(d, _dec_perimeter))
-    u = unwrap(g)
-
-    def ring_step(racc, ri):
-        off = racc["off"]
-        return _let(
-            _le_uint32(u, off),
-            lambda npts: F.struct(
-                (off + 4 + 16 * npts).alias("off"),
-                (
-                    racc["tot"]
-                    + F.aggregate(
-                        _seq0(npts - 1),
-                        F.lit(0.0),
-                        lambda s, ei: s + _edge_len(u, off + 4, ei),
-                    )
-                ).alias("tot"),
-            ),
-        )
-
-    init = F.struct(
-        F.lit(10).cast("bigint").alias("off"), F.lit(0.0).alias("tot")
-    )
-    res = F.aggregate(_seq0(_le_uint32(u, 6)), init, ring_step)
-    return wrap(
-        F.when(_is_poly(u), res["tot"])
-        .when(_is_mpoly(u), _let(_decode_struct(u), _dec_perimeter))
-        .when(_is_pt(u) | _is_line(u), F.lit(0.0))
-        .otherwise(F.lit(None).cast("double"))
-    )
+    interior ring (holes add to the perimeter; a multipolygon sums
+    every ring), 0.0 for points and linestrings, NULL on foreign
+    bytes.  Same decoded fold as geo_length, over every ring."""
+    return wrap(_let(_as_dec(g), _dec_perimeter))
 
 
 def geo_geometry_type(g):
@@ -1574,137 +1366,18 @@ def geo_n_rings(g):
     )
 
 
-def _bbox_struct(u):
-    """STRUCT(xmin, xmax, ymin, ymax) of a LE WKB point / linestring /
-    polygon — one vertex walk, shared by the four extreme accessors and
-    geo_envelope.  least/greatest skip NULL accumulator seeds, so the
-    first vertex initializes all four extremes.  NULL struct fields on
-    foreign bytes or out-of-domain coordinates."""
-
-    def fold_run(base, n, acc0):
-        # fold vertices [0, n) at 1-based byte base + 16*i into acc0
-        def vstep(a, vi):
-            return _let(
-                F.hex(F.substring(u, (base + 16 * vi).cast("int"), 16)),
-                lambda h: _let(
-                    F.struct(
-                        _hexle_double(h, 0).alias("x"),
-                        _hexle_double(h, 16).alias("y"),
-                    ),
-                    lambda v: F.struct(
-                        F.least(a["xmin"], v["x"]).alias("xmin"),
-                        F.greatest(a["xmax"], v["x"]).alias("xmax"),
-                        F.least(a["ymin"], v["y"]).alias("ymin"),
-                        F.greatest(a["ymax"], v["y"]).alias("ymax"),
-                    ),
-                ),
-            )
-
-        return F.aggregate(_seq0(n), acc0, vstep)
-
-    nulld = F.lit(None).cast("double")
-    empty = F.struct(
-        nulld.alias("xmin"),
-        nulld.alias("xmax"),
-        nulld.alias("ymin"),
-        nulld.alias("ymax"),
-    )
-
-    # point: both extremes are the coordinate itself
-    px, py = _pt_double(u, 6), _pt_double(u, 14)
-    pt_box = F.struct(
-        px.alias("xmin"), px.alias("xmax"), py.alias("ymin"), py.alias("ymax")
-    )
-    # linestring: one run at byte 10
-    line_box = fold_run(F.lit(10).cast("bigint"), _le_uint32(u, 6), empty)
-
-    # polygon: ring-directory walk, extremes carried in the accumulator
-    def ring_step(racc, ri):
-        off = racc["off"]
-        return _let(
-            _le_uint32(u, off),
-            lambda npts: _let(
-                fold_run(
-                    off + 4,
-                    npts,
-                    F.struct(
-                        racc["xmin"].alias("xmin"),
-                        racc["xmax"].alias("xmax"),
-                        racc["ymin"].alias("ymin"),
-                        racc["ymax"].alias("ymax"),
-                    ),
-                ),
-                lambda b: F.struct(
-                    (off + 4 + 16 * npts).alias("off"),
-                    b["xmin"].alias("xmin"),
-                    b["xmax"].alias("xmax"),
-                    b["ymin"].alias("ymin"),
-                    b["ymax"].alias("ymax"),
-                ),
-            ),
-        )
-
-    poly0 = F.struct(
-        F.lit(10).cast("bigint").alias("off"),
-        nulld.alias("xmin"),
-        nulld.alias("xmax"),
-        nulld.alias("ymin"),
-        nulld.alias("ymax"),
-    )
-    pb = F.aggregate(_seq0(_le_uint32(u, 6)), poly0, ring_step)
-    poly_box = F.struct(
-        pb["xmin"].alias("xmin"),
-        pb["xmax"].alias("xmax"),
-        pb["ymin"].alias("ymin"),
-        pb["ymax"].alias("ymax"),
-    )
-
-    # MULTIPOINT: fixed 21-byte child stride, coordinates at child+5
-    def mpt_step(a, ci):
-        return _let(
-            F.hex(F.substring(u, (15 + 21 * ci).cast("int"), 16)),
-            lambda h: _let(
-                F.struct(
-                    _hexle_double(h, 0).alias("x"),
-                    _hexle_double(h, 16).alias("y"),
-                ),
-                lambda v: F.struct(
-                    F.least(a["xmin"], v["x"]).alias("xmin"),
-                    F.greatest(a["xmax"], v["x"]).alias("xmax"),
-                    F.least(a["ymin"], v["y"]).alias("ymin"),
-                    F.greatest(a["ymax"], v["y"]).alias("ymax"),
-                ),
-            ),
-        )
-
-    mpt_box = F.aggregate(_seq0(_le_uint32(u, 6)), empty, mpt_step)
-    return (
-        F.when(_is_pt(u), pt_box)
-        .when(_is_line(u), line_box)
-        .when(_is_poly(u), poly_box)
-        .when(_is_mpt(u), mpt_box)
-        .otherwise(empty)
-    )
-
-
 def geo_bbox(g):
-    """All four bbox extremes of a WKB geometry in ONE vertex walk, as
+    """All four bbox extremes of a geometry in ONE vertex fold, as
     STRUCT<xmin, xmax, ymin, ymax> — the Box2D-style companion to the
-    scalar GeoXMin..GeoYMax accessors (which each re-walk the bytes;
-    when a query needs several extremes, one geo_bbox + field reads
-    builds a ~4x smaller expression tree and decodes each vertex
-    once)."""
-    d = _dec_of(g)
-    if d is not None:
-        return wrap(_let(d, _dec_bbox))
-    return wrap(_bbox_struct(unwrap(g)))
+    scalar GeoXMin..GeoYMax accessors (when a query needs several
+    extremes, one geo_bbox + field reads builds one fold instead of
+    four).  Points, linestrings, polygons and multipoints; every field
+    NULL for other types and for input the decoder refuses."""
+    return wrap(_let(_as_dec(g), _dec_bbox))
 
 
 def _bbox_field(g, field):
-    d = _dec_of(g)
-    if d is not None:
-        return wrap(_let(d, lambda dd: _dec_bbox(dd)[field]))
-    return wrap(_bbox_struct(unwrap(g))[field])
+    return wrap(_let(_as_dec(g), lambda dd: _dec_bbox(dd)[field]))
 
 
 def geo_x_min(g):
@@ -1728,55 +1401,16 @@ def geo_y_max(g):
 
 
 def geo_envelope(g):
-    """Bounding box of a WKB geometry as a geometry — reference
+    """Bounding box of a geometry as a geometry — reference
     GeoEnvelope, PostGIS ST_Envelope semantics: a POINT for point
     input (or a fully degenerate box), a 2-vertex LINESTRING when the
     box is a horizontal or vertical segment, else the 5-vertex
     rectangle POLYGON (xmin ymin → xmax ymin → xmax ymax → xmin ymax,
-    closed).  Corner bytes are produced by the deterministic arithmetic
-    encoder, so an envelope of exact-codec-domain input round-trips
-    bit-exactly.  NULL on foreign bytes.  Decoded input yields a
-    DECODED envelope geometry (no codec either way)."""
-    dd = _dec_of(g)
-    if dd is not None:
-        return _dec_wrap(_let(dd, _dec_envelope))
-    u = unwrap(g)
-
-    def build(b):
-        xmin, xmax, ymin, ymax = b["xmin"], b["xmax"], b["ymin"], b["ymax"]
-
-        def vx(a, c):
-            return F.concat(_le_hex(_hex16_expr(a)), _le_hex(_hex16_expr(c)))
-
-        pt = F.unhex(F.concat(F.lit("0101000000"), vx(xmin, ymin)))
-        line = F.unhex(
-            F.concat(
-                F.lit("0102000000"),
-                _le_hex32(F.lit(2).cast("bigint")),
-                vx(xmin, ymin),
-                vx(xmax, ymax),
-            )
-        )
-        poly = F.unhex(
-            F.concat(
-                F.lit("0103000000"),
-                _le_hex32(F.lit(1).cast("bigint")),
-                _le_hex32(F.lit(5).cast("bigint")),
-                vx(xmin, ymin),
-                vx(xmax, ymin),
-                vx(xmax, ymax),
-                vx(xmin, ymax),
-                vx(xmin, ymin),
-            )
-        )
-        return (
-            F.when(xmin.isNull() | ymin.isNull(), F.lit(None).cast("binary"))
-            .when((xmin == xmax) & (ymin == ymax), pt)
-            .when((xmin == xmax) | (ymin == ymax), line)
-            .otherwise(poly)
-        )
-
-    return wrap(_let(_bbox_struct(u), build))
+    closed).  NULL on foreign bytes.  Returned in the input's form
+    (_same_form): decoded for decoded input, WKB for WKB input, whose
+    corner bytes round-trip bit-exactly for exact-codec-domain
+    input."""
+    return _same_form(g, _dec_envelope)
 
 
 def _vertex_point(u, base, vi):
@@ -1888,215 +1522,25 @@ def geo_point_n(g, n):
 
 
 def geo_centroid(g):
-    """Geometric center of a WKB geometry as a WKB POINT — reference
+    """Geometric center of a geometry as a POINT — reference
     GeoCentroid, PostGIS semantics per dimension: a point is its own
-    centroid (bytes copied verbatim); a linestring's centroid is the
-    length-weighted mean of its segment midpoints (degenerate
-    zero-length linestrings fall back to the first vertex, as PostGIS
-    collapses them to a point); a polygon's centroid is the
-    area-weighted shoelace centroid with holes SUBTRACTED —
-    winding-insensitive (each ring's signed shoelace sums are
-    normalized by their own sign, same posture as geo_area), NULL if
-    the total area is zero.  NULL on foreign bytes.
+    centroid; a linestring's centroid is the length-weighted mean of
+    its segment midpoints (degenerate zero-length linestrings fall back
+    to the first vertex, as PostGIS collapses them to a point); a
+    polygon's centroid is the area-weighted shoelace centroid with
+    holes SUBTRACTED — winding-insensitive (each ring's signed shoelace
+    sums are normalized by their own sign, same posture as geo_area),
+    NULL if the total area is zero; a multipoint's is the mean of its
+    members.  NULL on foreign bytes.
 
     The polygon math: per ring, signed 2A = sum(x1*y2 - x2*y1) and the
     raw moments sx = sum((x1+x2)*(x1*y2-x2*y1)), sy likewise; the ring
     contributes (|2A|/2, sign(2A)*sx/6, sign(2A)*sy/6) with holes
     (every ring after the first) negated; centroid = total moment /
     total area.  All products are exact for integer-valued coordinates,
-    so oracle parity is bit-robust wherever the inputs are.  Decoded
-    input yields a DECODED point (no codec)."""
-    dd = _dec_of(g)
-    if dd is not None:
-        return _dec_wrap(_let(dd, _dec_centroid), gtype=1)
-    u = unwrap(g)
-
-    # ---- linestring branch: length-weighted segment midpoints ----
-    def line_step(acc, ei):
-        return _let(
-            F.hex(F.substring(u, (F.lit(10) + 16 * ei).cast("int"), 32)),
-            lambda h: _let(
-                F.struct(
-                    _hexle_double(h, 0).alias("x1"),
-                    _hexle_double(h, 16).alias("y1"),
-                    _hexle_double(h, 32).alias("x2"),
-                    _hexle_double(h, 48).alias("y2"),
-                ),
-                lambda v: _let(
-                    F.sqrt(
-                        (v["x2"] - v["x1"]) * (v["x2"] - v["x1"])
-                        + (v["y2"] - v["y1"]) * (v["y2"] - v["y1"])
-                    ),
-                    lambda ln: F.struct(
-                        (acc["l"] + ln).alias("l"),
-                        (
-                            acc["mx"] + ln * (v["x1"] + v["x2"]) / F.lit(2.0)
-                        ).alias("mx"),
-                        (
-                            acc["my"] + ln * (v["y1"] + v["y2"]) / F.lit(2.0)
-                        ).alias("my"),
-                    ),
-                ),
-            ),
-        )
-
-    line0 = F.struct(
-        F.lit(0.0).alias("l"), F.lit(0.0).alias("mx"), F.lit(0.0).alias("my")
-    )
-    lres = F.aggregate(_seq0(_le_uint32(u, 6) - 1), line0, line_step)
-
-    # ---- polygon branch: shoelace centroid, holes subtract ----
-    def poly_edge(acc, ei, off):
-        return _let(
-            F.hex(F.substring(u, (off + 4 + 16 * ei).cast("int"), 32)),
-            lambda h: _let(
-                F.struct(
-                    _hexle_double(h, 0).alias("x1"),
-                    _hexle_double(h, 16).alias("y1"),
-                    _hexle_double(h, 32).alias("x2"),
-                    _hexle_double(h, 48).alias("y2"),
-                ),
-                lambda v: _let(
-                    v["x1"] * v["y2"] - v["x2"] * v["y1"],
-                    lambda cr: F.struct(
-                        (acc["sh"] + cr).alias("sh"),
-                        (acc["sx"] + (v["x1"] + v["x2"]) * cr).alias("sx"),
-                        (acc["sy"] + (v["y1"] + v["y2"]) * cr).alias("sy"),
-                    ),
-                ),
-            ),
-        )
-
-    def ring_step(racc, ri):
-        off = racc["off"]
-
-        def with_ring(npts, r):
-            sgn = F.signum(r["sh"])
-            w = F.abs(r["sh"]) / F.lit(2.0)
-            mx = sgn * r["sx"] / F.lit(6.0)
-            my = sgn * r["sy"] / F.lit(6.0)
-            hole = racc["idx"] > 0
-            return F.struct(
-                (off + 4 + 16 * npts).alias("off"),
-                (racc["idx"] + F.lit(1).cast("bigint")).alias("idx"),
-                (
-                    racc["a"] + F.when(hole, -w).otherwise(w)
-                ).alias("a"),
-                (
-                    racc["mx"] + F.when(hole, -mx).otherwise(mx)
-                ).alias("mx"),
-                (
-                    racc["my"] + F.when(hole, -my).otherwise(my)
-                ).alias("my"),
-            )
-
-        ring0 = F.struct(
-            F.lit(0.0).alias("sh"),
-            F.lit(0.0).alias("sx"),
-            F.lit(0.0).alias("sy"),
-        )
-        return _let(
-            _le_uint32(u, off),
-            lambda npts: _let(
-                F.aggregate(
-                    _seq0(npts - 1),
-                    ring0,
-                    lambda a, ei: poly_edge(a, ei, off),
-                ),
-                lambda r: with_ring(npts, r),
-            ),
-        )
-
-    poly0 = F.struct(
-        F.lit(10).cast("bigint").alias("off"),
-        F.lit(0).cast("bigint").alias("idx"),
-        F.lit(0.0).alias("a"),
-        F.lit(0.0).alias("mx"),
-        F.lit(0.0).alias("my"),
-    )
-    pres = F.aggregate(_seq0(_le_uint32(u, 6)), poly0, ring_step)
-
-    # The fold results (lres/pres) and the derived (cx, cy) pair are
-    # BOTH let-bound before the point emit: _hex16_expr references its
-    # input ~8 times and each coordinate references the fold twice, so
-    # the naive spelling duplicated the whole ring-walk aggregate ~32x
-    # in the UNRESOLVED tree — the analyzer's lambda resolution then
-    # deep-compares those copies quadratically (measured: minutes of
-    # analysis for a 25-row input; let-bound: sub-second).
-    def emit(c):
-        return F.unhex(
-            F.concat(
-                F.lit("0101000000"),
-                _le_hex(_hex16_expr(c["cx"])),
-                _le_hex(_hex16_expr(c["cy"])),
-            )
-        )
-
-    line_pt = _let(
-        lres,
-        lambda lr: _let(
-            F.struct(
-                F.when(lr["l"] > 0, lr["mx"] / lr["l"])
-                .otherwise(_wkb_double(u, 10))
-                .alias("cx"),
-                F.when(lr["l"] > 0, lr["my"] / lr["l"])
-                .otherwise(_wkb_double(u, 18))
-                .alias("cy"),
-            ),
-            emit,
-        ),
-    )
-    poly_pt = _let(
-        pres,
-        lambda pr: _let(
-            F.struct(
-                F.when(pr["a"] != 0.0, pr["mx"] / pr["a"])
-                .otherwise(F.lit(None).cast("double"))
-                .alias("cx"),
-                F.when(pr["a"] != 0.0, pr["my"] / pr["a"])
-                .otherwise(F.lit(None).cast("double"))
-                .alias("cy"),
-            ),
-            emit,
-        ),
-    )
-
-    # MULTIPOINT: arithmetic mean of the children (PostGIS), one
-    # stride-21 fold, divisions after the exact-when-dyadic sums
-    def mpt_step(a, ci):
-        return _let(
-            F.hex(F.substring(u, (15 + 21 * ci).cast("int"), 16)),
-            lambda h: F.struct(
-                (a["sx"] + _hexle_double(h, 0)).alias("sx"),
-                (a["sy"] + _hexle_double(h, 16)).alias("sy"),
-            ),
-        )
-
-    mpt_pt = _let(
-        F.struct(
-            F.aggregate(
-                _seq0(_le_uint32(u, 6)),
-                F.struct(F.lit(0.0).alias("sx"), F.lit(0.0).alias("sy")),
-                mpt_step,
-            ).alias("s"),
-            _le_uint32(u, 6).cast("double").alias("n"),
-        ),
-        lambda q: _let(
-            F.struct(
-                (q["s"]["sx"] / q["n"]).alias("cx"),
-                (q["s"]["sy"] / q["n"]).alias("cy"),
-            ),
-            emit,
-        ),
-    )
-
-    return wrap(
-        F.when(_is_pt(u), u)
-        .when(_is_line(u), line_pt)
-        .when(_is_poly(u), poly_pt)
-        .when(_is_mpt(u), mpt_pt)
-        .otherwise(F.lit(None).cast("binary"))
-    )
+    so oracle parity is bit-robust wherever the inputs are.  Returned
+    in the input's form (_same_form)."""
+    return _same_form(g, _dec_centroid, gtype=1)
 
 
 def geo_flip_coordinates(g):
@@ -2189,83 +1633,6 @@ def geo_azimuth(a, b):
     )
 
 
-def _edges_array(u):
-    """All edges of a LE WKB geometry as ARRAY<STRUCT<x1, y1, x2, y2>>.
-    A POINT contributes one DEGENERATE edge (P, P) — with the full CLRS
-    segment test this makes point-point intersection collapse to
-    coordinate equality and point-on-segment fall out of the
-    collinear-touch branch, so one predicate serves all type pairs.
-    NULL array on foreign bytes — callers gate on type.
-
-    Materializing the decoded edge structs ONCE per row (rather than
-    folding a predicate over the byte walk) matters twice: the pairwise
-    consumer (geo_intersects) would otherwise RE-DECODE every edge of
-    one side for every edge of the other — O(Ea*Eb) codec work instead
-    of O(Ea+Eb) — and the flat transform()/one-exists() shape has ~4x
-    fewer nested LambdaFunctions, which the analyzer resolves
-    super-linearly (the geo_centroid lesson)."""
-
-    def edge_at(base, ei):
-        return _let(
-            F.hex(F.substring(u, (base + 16 * ei).cast("int"), 32)),
-            lambda h: F.struct(
-                _hexle_double(h, 0).alias("x1"),
-                _hexle_double(h, 16).alias("y1"),
-                _hexle_double(h, 32).alias("x2"),
-                _hexle_double(h, 48).alias("y2"),
-            ),
-        )
-
-    pt_arr = _let(
-        F.struct(
-            _pt_double(u, 6).alias("px"), _pt_double(u, 14).alias("py")
-        ),
-        lambda p: F.array(
-            F.struct(
-                p["px"].alias("x1"),
-                p["py"].alias("y1"),
-                p["px"].alias("x2"),
-                p["py"].alias("y2"),
-            )
-        ),
-    )
-    line_arr = F.transform(
-        _seq0(_le_uint32(u, 6) - 1),
-        lambda ei: edge_at(F.lit(10).cast("bigint"), ei),
-    )
-
-    def ring_step(racc, ri):
-        off = racc["off"]
-        return _let(
-            _le_uint32(u, off),
-            lambda npts: F.struct(
-                (off + 4 + 16 * npts).alias("off"),
-                F.concat(
-                    racc["arr"],
-                    F.transform(_seq0(npts - 1), lambda ei: edge_at(off + 4, ei)),
-                ).alias("arr"),
-            ),
-        )
-
-    poly0 = F.struct(
-        F.lit(10).cast("bigint").alias("off"),
-        F.expr(
-            "CAST(array() AS ARRAY<STRUCT<x1:DOUBLE,y1:DOUBLE,"
-            "x2:DOUBLE,y2:DOUBLE>>)"
-        ).alias("arr"),
-    )
-    poly_arr = F.aggregate(_seq0(_le_uint32(u, 6)), poly0, ring_step)["arr"]
-    null_arr = F.lit(None).cast(
-        "array<struct<x1:double,y1:double,x2:double,y2:double>>"
-    )
-    return (
-        F.when(_is_pt(u), pt_arr)
-        .when(_is_line(u), line_arr)
-        .when(_is_poly(u), poly_arr)
-        .otherwise(null_arr)
-    )
-
-
 def _seg_intersects(e1, e2):
     """Closed-segment intersection test (CLRS 33.1): proper crossing
     via four orientation signs, plus the collinear-touch branches with
@@ -2310,21 +1677,9 @@ def _seg_intersects(e1, e2):
     )
 
 
-def _first_vertex_point(u):
-    """First vertex of any LE WKB geometry as a standalone WKB POINT
-    (sliced bytes, no codec)."""
-    z = F.lit(0).cast("bigint")
-    return (
-        F.when(_is_pt(u), u)
-        .when(_is_line(u), _vertex_point(u, F.lit(10).cast("bigint"), z))
-        .when(_is_poly(u), _vertex_point(u, F.lit(14).cast("bigint"), z))
-        .otherwise(F.lit(None).cast("binary"))
-    )
-
-
 def geo_intersects(a, b):
-    """True when two LE WKB geometries (point / linestring / polygon,
-    any pairing) share at least one point — reference GeoIntersects,
+    """True when two geometries (point / linestring / polygon, any
+    pairing) share at least one point — reference GeoIntersects,
     PostGIS ST_Intersects semantics (boundary contact counts).
 
     Decomposition: geometries intersect iff (1) some edge of A touches
@@ -2341,69 +1696,16 @@ def geo_intersects(a, b):
     (tens of vertices), not for digitized coastlines.  Points exactly
     ON a boundary follow geo_contains' half-open caveat when only
     containment (not edge contact) decides.  NULL unless both sides
-    are LE point/linestring/polygon WKB.
+    are point/linestring/polygon the decoder accepts.
 
-    The two inputs are LET-BOUND once at the top: this predicate reads
-    each geometry ~15 times (type gates, edge arrays, vertex slices,
-    two ray-cast gates), and when the input is a COMPUTED geometry
-    (a constructor expression) Catalyst inlined the constructor tree
-    into every read — measured 9 full linestring-constructor
-    evaluations PER ROW in geo_segment_cross's optimized plan (72
-    encoder instantiations where the staged shape has 8).  Binding the
-    raw bytes to a lambda leaf makes every internal read leaf-cheap
-    regardless of what the caller feeds in.
-
-    Decoded input (either side) runs the same decomposition as an
-    arithmetic fold with no byte codec — measured 20x cheaper on the
-    segment-cross fixture (8.1 s -> 0.4 s at sf0.1, r11)."""
-    da, db = _dec_of(a), _dec_of(b)
-    if da is not None or db is not None:
-        ea = da if da is not None else _decode_struct(unwrap(a))
-        eb = db if db is not None else _decode_struct(unwrap(b))
-        return wrap(
-            _let(
-                F.struct(ea.alias("a"), eb.alias("b")),
-                lambda s: _dec_intersects(s["a"], s["b"]),
-            )
-        )
-
-    def body(ua, ub):
-        # both edge sets decode ONCE into let-bound arrays, then one
-        # exists-exists pair test over the materialized structs — see
-        # _edges_array for why this beats a nested byte-walk fold
-        cross = F.coalesce(
-            _let(
-                F.struct(
-                    _edges_array(ua).alias("ea"), _edges_array(ub).alias("eb")
-                ),
-                lambda s: F.exists(
-                    s["ea"],
-                    lambda e1: F.coalesce(
-                        F.exists(s["eb"], lambda e2: _seg_intersects(e1, e2)),
-                        F.lit(False),
-                    ),
-                ),
-            ),
-            F.lit(False),
-        )
-        a_swallows_b = F.coalesce(
-            unwrap(geo_contains(wrap(ua), wrap(_first_vertex_point(ub)))),
-            F.lit(False),
-        )
-        b_swallows_a = F.coalesce(
-            unwrap(geo_contains(wrap(ub), wrap(_first_vertex_point(ua)))),
-            F.lit(False),
-        )
-        known_a = _is_pt(ua) | _is_line(ua) | _is_poly(ua)
-        known_b = _is_pt(ub) | _is_line(ub) | _is_poly(ub)
-        return F.when(
-            known_a & known_b, cross | a_swallows_b | b_swallows_a
-        ).otherwise(F.lit(None).cast("boolean"))
-
+    Both sides decode once (_as_dec) and bind together, so every read
+    inside the fold is a lambda leaf however the caller built the
+    inputs — the decoded fold is 20x cheaper than the former byte walk
+    on the segment-cross fixture (8.1 s -> 0.4 s at sf0.1, r11)."""
     return wrap(
         _let(
-            F.struct(unwrap(a).alias("ga"), unwrap(b).alias("gb")),
-            lambda g: body(g["ga"], g["gb"]),
+            F.struct(_as_dec(a).alias("a"), _as_dec(b).alias("b")),
+            lambda s: _dec_intersects(s["a"], s["b"]),
         )
     )
 
@@ -2420,80 +1722,15 @@ def geo_line_locate_point(line, pt):
     ties (deterministic left-to-right, same answer every run).  NULL
     for non-linestrings or a NULL/invalid point; 0.0 for zero-length
     lines (PostGIS contract)."""
-    dl, dq = _dec_of(line), _dec_of(pt)
-    if dl is not None or dq is not None:
-        el = dl if dl is not None else _decode_struct(unwrap(line))
-        px, py = _pt_x_expr(pt), _pt_y_expr(pt)
-        return wrap(
-            _let(
-                F.struct(el.alias("l"), px.alias("px"), py.alias("py")),
-                lambda s: _dec_line_locate(s["l"], s["px"], s["py"]),
-            )
-        )
-    u, p = unwrap(line), unwrap(pt)
-
-    def walk(q):
-        px, py = q["px"], q["py"]
-
-        def step(acc, e):
-            ax, ay, bx, by = e["x1"], e["y1"], e["x2"], e["y2"]
-            dx, dy = bx - ax, by - ay
-
-            def with_t(s):
-                elen, t = s["elen"], s["t"]
-                qx = ax + t * dx
-                qy = ay + t * dy
-                d2 = (px - qx) * (px - qx) + (py - qy) * (py - qy)
-                better = d2 < acc["bd2"]
-                return F.struct(
-                    (acc["cum"] + elen).alias("cum"),
-                    F.when(better, d2).otherwise(acc["bd2"]).alias("bd2"),
-                    F.when(better, acc["cum"] + t * elen)
-                    .otherwise(acc["blen"])
-                    .alias("blen"),
-                )
-
-            l2 = dx * dx + dy * dy
-            t_raw = F.when(
-                l2 > 0, ((px - ax) * dx + (py - ay) * dy) / l2
-            ).otherwise(F.lit(0.0))
-            return _let(
-                F.struct(
-                    F.sqrt(l2).alias("elen"),
-                    F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw)).alias("t"),
-                ),
-                with_t,
-            )
-
-        init = F.struct(
-            F.lit(0.0).alias("cum"),
-            F.lit(float("inf")).alias("bd2"),
-            F.lit(0.0).alias("blen"),
-        )
-        res = F.aggregate(_edges_array(u), init, step)
-        # NULL cum means an undecodable line vertex poisoned the walk —
-        # NULL-propagate rather than report the 0.0 zero-length answer.
-        return (
-            F.when(res["cum"].isNull(), F.lit(None).cast("double"))
-            .when(res["cum"] > 0, res["blen"] / res["cum"])
-            .otherwise(F.lit(0.0))
-        )
-
-    out = _let(
-        F.struct(_pt_double(p, 6).alias("px"), _pt_double(p, 14).alias("py")),
-        walk,
-    )
     return wrap(
-        F.when(
-            _is_line(u)
-            & _is_pt(p)
-            # gate on BOTH coordinates: a point whose y decodes NULL
-            # (out-of-domain foreign bytes) would otherwise leave the
-            # argmin untouched and return 0.0 instead of NULL.
-            & _pt_double(p, 6).isNotNull()
-            & _pt_double(p, 14).isNotNull(),
-            out,
-        ).otherwise(F.lit(None).cast("double"))
+        _let(
+            F.struct(
+                _as_dec(line).alias("l"),
+                _pt_x_expr(pt).alias("px"),
+                _pt_y_expr(pt).alias("py"),
+            ),
+            lambda s: _dec_line_locate(s["l"], s["px"], s["py"]),
+        )
     )
 
 
@@ -2508,124 +1745,13 @@ def geo_line_substring(line, start: float, end: float):
     lines; ``start == end`` yields the degenerate 2-vertex linestring
     at that point (the WKB-expressible stand-in for PostGIS' POINT
     return).  Interpolation is a + t*(b-a) with one rounding per
-    coordinate, so dyadic fixtures stay exact end-to-end."""
+    coordinate, so dyadic fixtures stay exact end-to-end.  Returned in
+    the input's form (_same_form)."""
     s_f, e_f = float(start), float(end)
     if not (0.0 <= s_f <= e_f <= 1.0):
         raise ValueError("need 0 <= start <= end <= 1")
-    d = _dec_of(line)
-    if d is not None:
-        # decoded-native walk (same interpolation logic as the WKB
-        # path below over decoded edges, emitting a DECODED linestring
-        # — an encode fallback re-references the whole encode tree per
-        # read and blew past the analyzer's iteration cap)
-        return _dec_wrap(
-            _let(d, lambda dd: _dec_line_substring(dd, s_f, e_f)), gtype=2
-        )
-    u = unwrap(line)
-
-    def walk(L):
-        s = F.lit(s_f) * L
-        e = F.lit(e_f) * L
-        empty = F.expr("CAST(array() AS ARRAY<STRUCT<x:DOUBLE,y:DOUBLE>>)")
-
-        def step(acc, ed):
-            ax, ay, bx, by = ed["x1"], ed["y1"], ed["x2"], ed["y2"]
-            dx, dy = bx - ax, by - ay
-
-            def with_e(st):
-                elen = st["elen"]
-                c0 = acc["cum"]
-                c1 = c0 + elen
-
-                def interp(arc):
-                    # clamp guards FP drift at edge boundaries (c0/c1
-                    # are running sums; never extrapolate past a vertex)
-                    t = F.when(
-                        elen > 0,
-                        F.greatest(
-                            F.lit(0.0),
-                            F.least(F.lit(1.0), (arc - c0) / elen),
-                        ),
-                    ).otherwise(F.lit(0.0))
-                    return F.struct(
-                        (ax + t * dx).alias("x"), (ay + t * dy).alias("y")
-                    )
-
-                add_start = F.when(
-                    (F.size(acc["arr"]) == 0) & (s <= c1),
-                    F.array(interp(s)),
-                ).otherwise(empty)
-                add_vert = F.when(
-                    (c1 > s) & (c1 < e),
-                    F.array(F.struct(bx.alias("x"), by.alias("y"))),
-                ).otherwise(empty)
-                # fires on exactly ONE edge: the first whose span
-                # reaches e (e == c0 means the PREVIOUS edge already
-                # fired, except the degenerate e == 0 start-of-line)
-                add_end = F.when(
-                    ((e > c0) | ((e == 0.0) & (c0 == 0.0))) & (e <= c1),
-                    F.array(interp(e)),
-                ).otherwise(empty)
-                return F.struct(
-                    c1.alias("cum"),
-                    F.concat(
-                        acc["arr"], add_start, add_vert, add_end
-                    ).alias("arr"),
-                )
-
-            return _let(
-                F.struct(F.sqrt(dx * dx + dy * dy).alias("elen")), with_e
-            )
-
-        init = F.struct(
-            F.lit(0.0).alias("cum"), empty.alias("arr")
-        )
-        arr = F.aggregate(_edges_array(u), init, step)["arr"]
-
-        def emit(vs):
-            # staged encoder over the assembled vertex arrays (the
-            # inline _hex16_expr spelling pays the lambda-body _let
-            # expansion — see _hex16_arr)
-            vhex = F.zip_with(
-                _hex16_arr(F.transform(vs, lambda v: v["x"])),
-                _hex16_arr(F.transform(vs, lambda v: v["y"])),
-                lambda a2, b2: F.concat(_le_hex(a2), _le_hex(b2)),
-            )
-            body = F.aggregate(
-                vhex, F.lit(""), lambda a2, h: F.concat(a2, h)
-            )
-            return F.when(
-                F.size(vs) >= 2,
-                F.unhex(
-                    F.concat(
-                        F.lit("0102000000"),
-                        _le_hex32(F.size(vs).cast("bigint")),
-                        body,
-                    )
-                ),
-            ).otherwise(F.lit(None).cast("binary"))
-
-        return _let(arr, emit)
-
-    total = F.aggregate(
-        _edges_array(u),
-        F.lit(0.0),
-        lambda s2, ed: s2
-        + _let(
-            F.struct(
-                (ed["x2"] - ed["x1"]).alias("dx"),
-                (ed["y2"] - ed["y1"]).alias("dy"),
-            ),
-            lambda d: F.sqrt(d["dx"] * d["dx"] + d["dy"] * d["dy"]),
-        ),
-    )
-    return wrap(
-        _let(
-            total,
-            lambda L: F.when(_is_line(u) & (L > 0), walk(L)).otherwise(
-                F.lit(None).cast("binary")
-            ),
-        )
+    return _same_form(
+        line, lambda dd: _dec_line_substring(dd, s_f, e_f), gtype=2
     )
 
 
@@ -2811,81 +1937,20 @@ def geo_geometry_n(g, n):
     )
 
 
-def _edges_has_null(ea):
-    """True when any decoded vertex in an edge array is NULL (foreign
-    LE WKB with out-of-codec-domain coordinates).  F.greatest SKIPS
-    NULL operands, so a max fold would silently drop an undecodable
-    far vertex — callers gate on this to NULL-propagate instead,
-    matching geo_area's degrade-to-NULL posture."""
-    return F.exists(
-        ea,
-        lambda e: e["x1"].isNull()
-        | e["y1"].isNull()
-        | e["x2"].isNull()
-        | e["y2"].isNull(),
-    )
-
-
 def geo_max_distance(a, b):
-    """Maximum planar distance between two LE WKB geometries —
-    reference GeoMaxDistance (geospatial.py:223, PostGIS
-    ST_MaxDistance).  Distance is CONVEX along a segment, so the
-    maximum over two geometries is attained at a VERTEX pair; one
-    nested fold over the two decoded edge arrays (endpoints duplicated
-    across adjacent edges — harmless under max) computes the exact
-    squared maximum, with one sqrt at the end.  NULL unless both sides
-    are LE point/linestring/polygon WKB with every vertex inside the
-    codec domain (any NULL vertex decode -> NULL result, not a
-    silently-smaller max)."""
-    da, db = _dec_of(a), _dec_of(b)
-    if da is not None or db is not None:
-        ea = da if da is not None else _decode_struct(unwrap(a))
-        eb = db if db is not None else _decode_struct(unwrap(b))
-        return wrap(
-            _let(
-                F.struct(ea.alias("a"), eb.alias("b")),
-                lambda s: _dec_max_distance(s["a"], s["b"]),
-            )
-        )
-    ua, ub = unwrap(a), unwrap(b)
-
-    def body(s):
-        def d2(px, py, qx, qy):
-            return (px - qx) * (px - qx) + (py - qy) * (py - qy)
-
-        def inner(e1):
-            return F.aggregate(
-                s["eb"],
-                F.lit(None).cast("double"),
-                lambda acc, e2: F.greatest(
-                    acc,
-                    d2(e1["x1"], e1["y1"], e2["x1"], e2["y1"]),
-                    d2(e1["x1"], e1["y1"], e2["x2"], e2["y2"]),
-                    d2(e1["x2"], e1["y2"], e2["x1"], e2["y1"]),
-                    d2(e1["x2"], e1["y2"], e2["x2"], e2["y2"]),
-                ),
-            )
-
-        m2 = F.aggregate(
-            s["ea"],
-            F.lit(None).cast("double"),
-            lambda acc, e1: F.greatest(acc, inner(e1)),
-        )
-        bad = _edges_has_null(s["ea"]) | _edges_has_null(s["eb"])
-        return F.when(bad, F.lit(None).cast("double")).otherwise(F.sqrt(m2))
-
-    known_a = _is_pt(ua) | _is_line(ua) | _is_poly(ua)
-    known_b = _is_pt(ub) | _is_line(ub) | _is_poly(ub)
+    """Maximum planar distance between two geometries — reference
+    GeoMaxDistance (geospatial.py:223, PostGIS ST_MaxDistance).
+    Distance is CONVEX along a segment, so the maximum over two
+    geometries is attained at a VERTEX pair; one nested fold over the
+    two decoded vertex arrays computes the exact squared maximum, with
+    one sqrt at the end.  NULL unless both sides are
+    point/linestring/polygon the decoder accepts (an out-of-domain
+    vertex NULLs the whole geometry, never a silently-smaller max)."""
     return wrap(
-        F.when(
-            known_a & known_b,
-            _let(
-                F.struct(
-                    _edges_array(ua).alias("ea"), _edges_array(ub).alias("eb")
-                ),
-                body,
-            ),
-        ).otherwise(F.lit(None).cast("double"))
+        _let(
+            F.struct(_as_dec(a).alias("a"), _as_dec(b).alias("b")),
+            lambda s: _dec_max_distance(s["a"], s["b"]),
+        )
     )
 
 
@@ -2896,70 +1961,22 @@ def geo_d_fully_within(a, b, distance):
     max_distance(a, b) <= distance, compared in the squared domain (no
     sqrt rounding at the boundary).  Negative tolerance matches
     nothing, same posture as geo_dwithin."""
-    da, db = _dec_of(a), _dec_of(b)
-    if da is not None or db is not None:
-        ea = da if da is not None else _decode_struct(unwrap(a))
-        eb = db if db is not None else _decode_struct(unwrap(b))
-        dv = unwrap(distance)
-        return wrap(
-            _let(
-                F.struct(ea.alias("a"), eb.alias("b")),
-                lambda s: _dec_d_fully_within(s["a"], s["b"], dv),
-            )
-        )
-    ua, ub = unwrap(a), unwrap(b)
-    d = unwrap(distance)
-
-    def body(s):
-        def d2(px, py, qx, qy):
-            return (px - qx) * (px - qx) + (py - qy) * (py - qy)
-
-        def inner(e1):
-            return F.aggregate(
-                s["eb"],
-                F.lit(None).cast("double"),
-                lambda acc, e2: F.greatest(
-                    acc,
-                    d2(e1["x1"], e1["y1"], e2["x1"], e2["y1"]),
-                    d2(e1["x1"], e1["y1"], e2["x2"], e2["y2"]),
-                    d2(e1["x2"], e1["y2"], e2["x1"], e2["y1"]),
-                    d2(e1["x2"], e1["y2"], e2["x2"], e2["y2"]),
-                ),
-            )
-
-        m2 = F.aggregate(
-            s["ea"],
-            F.lit(None).cast("double"),
-            lambda acc, e1: F.greatest(acc, inner(e1)),
-        )
-        bad = _edges_has_null(s["ea"]) | _edges_has_null(s["eb"])
-        return F.when(bad, F.lit(None).cast("boolean")).otherwise(
-            (d >= 0) & (m2 <= d * d)
-        )
-
-    known_a = _is_pt(ua) | _is_line(ua) | _is_poly(ua)
-    known_b = _is_pt(ub) | _is_line(ub) | _is_poly(ub)
+    dv = unwrap(distance)
     return wrap(
-        F.when(
-            known_a & known_b,
-            _let(
-                F.struct(
-                    _edges_array(ua).alias("ea"), _edges_array(ub).alias("eb")
-                ),
-                body,
-            ),
-        ).otherwise(F.lit(None).cast("boolean"))
+        _let(
+            F.struct(_as_dec(a).alias("a"), _as_dec(b).alias("b")),
+            lambda s: _dec_d_fully_within(s["a"], s["b"], dv),
+        )
     )
 
 
 # -- decode-once representation (round 11) ------------------------------------
 #
-# The r10 measure/predicate family re-decodes the WKB bytes once PER
-# MEASURE per row, and Spark higher-order functions are CodegenFallback
-# (interpreted) — the hex-string codec inside those lambdas is the
-# dominant cost of multi-measure geo queries (~40 us per byte-walk per
-# row, SCALE.md "round 10 late").  The scale path is DECODE ONCE: a
-# public decoded column type
+# Spark higher-order functions are CodegenFallback (interpreted), and
+# the hex-string codec inside their lambdas dominated multi-measure geo
+# queries when every measure walked the WKB bytes itself (~40 us per
+# byte walk per row, SCALE.md "round 10 late").  The scale path is
+# DECODE ONCE: a public decoded column type
 #
 #     struct<gtype:int, parts:array<array<struct<x:double,y:double>>>>
 #
@@ -2975,7 +1992,7 @@ def geo_d_fully_within(a, b, distance):
 # for NULL input, foreign/BE/unknown-type bytes, and any vertex whose
 # coordinate decodes outside the exact codec domain — so decoded
 # consumers never see a NULL coordinate and the degrade-to-NULL posture
-# of the WKB paths is preserved centrally.
+# holds for WKB and decoded input alike.
 
 _DEC_T = "struct<gtype:int,parts:array<array<struct<x:double,y:double>>>>"
 _PARTS_T = "array<array<struct<x:double,y:double>>>"
@@ -3392,12 +2409,11 @@ class DecodedGeo(Column):
     recover it), so feed constructor results straight into predicates
     when plan size matters."""
 
-    __slots__ = ("_static_gtype", "_src_wkb")
+    __slots__ = ("_static_gtype",)
 
     def __init__(self, *args, **kwargs):
         super().__init__(*args, **kwargs)
         object.__setattr__(self, "_static_gtype", None)
-        object.__setattr__(self, "_src_wkb", None)
 
 
 def _dec_wrap(sc, gtype=None):
@@ -3434,6 +2450,26 @@ def _dec_of(g):
     return None
 
 
+def _as_dec(g):
+    """The decoded struct behind ``g``: ``_dec_of(g)``, or the decode of
+    its LE WKB bytes (types 1-6).  The one lowering of WKB input for
+    every fold over coordinates.  Like every internal decode it does
+    not normalise EWKB or walk collections, so those stay NULL here:
+    route them through ``geo_decode``."""
+    d = _dec_of(g)
+    return d if d is not None else _decode_struct(unwrap(g))
+
+
+def _same_form(g, fold, gtype=None):
+    """``fold`` over the decoded form of ``g``, returned in ``g``'s own
+    form: a decoded geometry for decoded input, WKB bytes (the decoded
+    result through geo_encode's encoder) for WKB input."""
+    d = _dec_of(g)
+    if d is not None:
+        return _dec_wrap(_let(d, fold), gtype=gtype)
+    return wrap(_encode(_let(_decode_struct(unwrap(g)), fold)))
+
+
 def _is_dec_type(dt) -> bool:
     from pyspark.sql.types import ArrayType, StructType
 
@@ -3460,7 +2496,8 @@ def geo_decode(g, *, collections=False):
     fold over native doubles instead of re-walking hex-encoded bytes
     per measure (the r10 ``weak``-label fix; SCALE.md round 11).
     Reference parity: this is an engine-level optimization with no
-    reference analog — results are bit-identical to the WKB paths.
+    reference analog — WKB input to a measure decodes through the same
+    folds, so results are bit-identical either way.
 
     r13: this ingest point additionally accepts PostGIS EWKB input
     (the SRID flag+field are stripped first; geo_ewkb_srid reads the
@@ -3482,12 +2519,7 @@ def geo_decode(g, *, collections=False):
         if collections
         else _bind(_ewkb_norm(u), _decode_struct)
     )
-    out = _dec_wrap(expr)
-    # remember the WKB source: the batch set-op path re-uses the raw
-    # bytes instead of re-encoding through the decode tree (whose
-    # _let-in-lambda staging defeats ExtractPythonUDFs as a UDF arg)
-    object.__setattr__(out, "_src_wkb", unwrap(g))
-    return out
+    return _dec_wrap(expr)
 
 
 def geo_encode(g):
@@ -3500,7 +2532,13 @@ def geo_encode(g):
     each member's (gtype, part-count) pair re-encodes its parts slice
     through the same per-type builders."""
     d = _dec_of(g)
-    expr = d if d is not None else unwrap(g)
+    return wrap(_encode(d if d is not None else unwrap(g)))
+
+
+def _encode(expr):
+    """LE WKB bytes of a decoded-struct expression — geo_encode's
+    encoder, also the WKB output of the geometry-returning folds over
+    WKB input (_same_form)."""
 
     def part_hex(P):
         vh = _vhex_arr(
@@ -3663,7 +2701,7 @@ def geo_encode(g):
         hx = F.when(gt == 7, _gc_hex(parts)).otherwise(_hex_of(gt, parts))
         return F.unhex(hx)
 
-    return wrap(_let(expr, body))
+    return _let(expr, body)
 
 
 # -- decoded constructors and measure bodies ----------------------------------
@@ -3671,9 +2709,9 @@ def geo_encode(g):
 # Construction directly IN the decoded form skips the IEEE byte codec
 # entirely (measured r11: the segment-cross fixture drops 8.1 s -> 0.4 s
 # at sf0.1 — the hex codec was the whole cost).  The decoded bodies
-# below mirror the WKB paths' contracts EXACTLY (same gtype gates, same
-# NULL posture, same summation order), so swapping a WKB pipeline to
-# decoded=True + geo_decode changes no result, only the plan.
+# below ARE the measures for both forms (WKB input decodes once through
+# _as_dec), so swapping a WKB pipeline to decoded=True + geo_decode
+# changes no result, only the plan.
 
 
 def _dom_ok_d(v):
@@ -3782,8 +2820,7 @@ _EMPTY_EDGES = (
 def _d_part_edges(P):
     """Consecutive-pair edges within ONE vertex part (ring / line) —
     empty for parts with fewer than 2 vertices; never crosses part
-    boundaries (the r10 _edges_array poly walk respected ring
-    boundaries the hard way; nesting makes it free)."""
+    boundaries (the nested parts make that free)."""
     n = F.size(P)
     z = F.zip_with(
         F.slice(P, 1, F.greatest(n - 1, F.lit(0))),
@@ -3800,8 +2837,9 @@ def _d_part_edges(P):
 
 def _d_edges(d):
     """All edges of a decoded geometry — degenerate (P, P) edges for
-    point/multipoint members (same convention as _edges_array, so
-    _seg_intersects serves every type pair unchanged)."""
+    point/multipoint members, so _seg_intersects serves every type
+    pair unchanged (point-point is coordinate equality, point-on-line
+    the collinear-touch branch)."""
     deg = F.transform(
         F.flatten(d["parts"]),
         lambda p: F.struct(
@@ -3921,7 +2959,7 @@ def _dec_bbox(d):
             F.greatest(a["ymax"], p["y"]).alias("ymax"),
         ),
     )
-    # mirror _bbox_struct: types 1-4 fold, others (incl. NULL) empty
+    # types 1-4 fold, others (incl. NULL) give the all-NULL box
     return F.when(d["gtype"].isin(1, 2, 3, 4), fold).otherwise(empty)
 
 
@@ -4011,13 +3049,17 @@ def _d_ring_shoelace(P):
 
 def _dec_area(d):
     def fin(a):
-        outer = F.abs(F.try_element_at(a, F.lit(1))) / F.lit(2.0)
+        # a polygon with no ring (POLYGON EMPTY) measures 0.0, as in
+        # PostGIS; coalesce leaves every other value bit-identical
+        outer = F.coalesce(
+            F.abs(F.try_element_at(a, F.lit(1))) / F.lit(2.0), F.lit(0.0)
+        )
         total = F.aggregate(
             a, F.lit(0.0), lambda s, v: s + F.abs(v) / F.lit(2.0)
         )
-        # outer - holes = 2*outer - total  (left-to-right parity with
-        # the WKB walk: outer + sum(-|ring_i|), same FP result because
-        # each term is exact-halved before summation)
+        # outer - holes = 2*outer - total  (the same FP result as the
+        # left-to-right outer + sum(-|ring_i|), because each term is
+        # exact-halved before summation)
         return outer - (total - outer)
 
     area = _let(F.transform(d["parts"], _d_ring_shoelace), fin)
@@ -4308,10 +3350,9 @@ def _dec_centroid(d):
 
 
 def _dec_line_substring(d, s_f: float, e_f: float):
-    """Decoded-native ST_LineSubstring: the same interpolation walk as
-    the WKB path (interpolated endpoints, interior vertices strictly
-    between), over decoded edges, emitting a decoded LINESTRING — zero
-    byte codec."""
+    """Decoded-native ST_LineSubstring: interpolated endpoints, interior
+    vertices strictly between, over decoded edges, emitting a decoded
+    LINESTRING — zero byte codec."""
     P1 = F.try_element_at(d["parts"], F.lit(1))
     edges = _d_part_edges(P1)
     empty = F.expr("CAST(array() AS ARRAY<STRUCT<x:DOUBLE,y:DOUBLE>>)")
@@ -4467,14 +3508,9 @@ def _on_edges(edges, px, py):
 def _pair_ctx(a, b):
     """LET-BOUND shared context for a decoded geometry pair: gtypes,
     edge arrays, vertex arrays, and edge midpoints — every predicate
-    branch below reads leaf variables only (plan-size discipline, see
-    geo_centroid's analyzer lesson)."""
-    ea = _dec_of(a)
-    if ea is None:
-        ea = _decode_struct(unwrap(a))
-    eb = _dec_of(b)
-    if eb is None:
-        eb = _decode_struct(unwrap(b))
+    branch below reads leaf variables only (plan-size discipline: the
+    analyzer's lambda resolution compares repeated copies of a subtree
+    quadratically)."""
 
     def mids(edges):
         return F.transform(
@@ -4499,7 +3535,9 @@ def _pair_ctx(a, b):
             mids(_d_edges(s["db"])).alias("bm"),
         )
 
-    return _let(F.struct(ea.alias("da"), eb.alias("db")), build)
+    return _let(
+        F.struct(_as_dec(a).alias("da"), _as_dec(b).alias("db")), build
+    )
 
 
 def _c_strict_inside(dpoly, px, py, poly_edges):
@@ -4963,12 +4001,8 @@ def geo_ordering_equals(a, b):
     GeoOrderingEquals (geospatial.py:161).  Decoded-form structural
     equality: any LE WKB byte spelling of the same ordered coordinates
     compares equal."""
-    ea = _dec_of(a)
-    if ea is None:
-        ea = _decode_struct(unwrap(a))
-    eb = _dec_of(b)
-    if eb is None:
-        eb = _decode_struct(unwrap(b))
+    ea = _as_dec(a)
+    eb = _as_dec(b)
     return wrap(
         _let(
             F.struct(ea.alias("x"), eb.alias("y")),
@@ -5069,9 +4103,7 @@ def geo_as_text(g):
     'POLYGON ((0 0, 4 0, ...), (...))', 'MULTIPOINT (1 2, 3 4)');
     integer-valued coordinates print without a decimal part.  NULL for
     NULL/foreign/out-of-domain input (decode contract)."""
-    d = _dec_of(g)
-    if d is None:
-        d = _decode_struct(unwrap(g))
+    d = _as_dec(g)
 
     def _txt_of(gt, parts):
         P1 = F.try_element_at(parts, F.lit(1))
@@ -5736,8 +4768,7 @@ def geo_multipolygon(*polys):
     round-trips it to WKB bytes."""
     ds = []
     for p in polys:
-        d = _dec_of(p)
-        ds.append(d if d is not None else _decode_struct(unwrap(p)))
+        ds.append(_as_dec(p))
     if not ds:
         return _dec_wrap(_dec_geom(6, _empty_parts()), gtype=6)
 
@@ -5768,8 +4799,7 @@ def geo_collection(*members):
     result to WKB type-7 bytes."""
     ds = []
     for m in members:
-        d = _dec_of(m)
-        ds.append(d if d is not None else _decode_struct(unwrap(m)))
+        ds.append(_as_dec(m))
     if not ds:
         return _dec_wrap(
             _dec_geom(7, F.array(_sh_empty_part())), gtype=7
@@ -6053,14 +5083,10 @@ def _mp_assemble(rings):
 
 
 def _setop_ctx(a, b):
-    da = _dec_of(a)
-    da = da if da is not None else _decode_struct(unwrap(a))
-    db = _dec_of(b)
-    db = db if db is not None else _decode_struct(unwrap(b))
-    return F.struct(da.alias("da"), db.alias("db"))
+    return F.struct(_as_dec(a).alias("da"), _as_dec(b).alias("db"))
 
 
-def geo_intersection(a, b, method: str = "expr"):
+def geo_intersection(a, b):
     """Geometric intersection of two polygons — reference
     GeoIntersection (geospatial.py:388).  ``a`` may carry holes (each
     ring is clipped independently; holes that clip empty are dropped);
@@ -6069,15 +5095,10 @@ def geo_intersection(a, b, method: str = "expr"):
     ring).  Returns the decoded polygon, or NULL when the intersection
     is empty or lower-dimensional (zero area).
 
-    ``method="batch"`` routes through the Arrow-batched Python kernel
-    (geo_batch.py): IEEE-identical to this path on every input it
-    answers, ~20x less per-row cost on small polygons, and NON-CONVEX
-    hole-free clip sides produce real results (Greiner-Hormann)
-    instead of NULL."""
-    if method == "batch":
-        return _setop_batch(a, b, "intersection")
-    if method != "expr":
-        raise ValueError(f"method must be 'expr' or 'batch', got {method!r}")
+    geo_setops_batch runs the same operation through the Arrow-batched
+    Python kernel (geo_batch.py): IEEE-identical to this path on every
+    input it answers, and NON-CONVEX hole-free clip sides produce real
+    results (Greiner-Hormann) instead of NULL."""
 
     def body(s):
         da, db = s["da"], s["db"]
@@ -6148,9 +5169,9 @@ def _bbox_apart(da, db):
     )
 
 
-def geo_difference(a, b, method: str = "expr"):
+def geo_difference(a, b):
     """Geometric difference a \\ b — reference GeoDifference
-    (geospatial.py:375).  ``method="batch"`` — see geo_intersection:
+    (geospatial.py:375).  geo_setops_batch — see geo_intersection:
     same results where this path answers, plus non-convex hole-free
     pairs (including the b-inside-a annulus).  Returns a decoded
     MULTIPOLYGON:
@@ -6164,10 +5185,6 @@ def geo_difference(a, b, method: str = "expr"):
     - a within b returns MULTIPOLYGON EMPTY;
     - anything else (non-convex b, holed a against an overlapping b,
       non-polygon input) returns NULL — never a wrong ring."""
-    if method == "batch":
-        return _setop_batch(a, b, "difference", gtype_hint=6)
-    if method != "expr":
-        raise ValueError(f"method must be 'expr' or 'batch', got {method!r}")
 
     def body(s):
         da, db = s["da"], s["db"]
@@ -6216,9 +5233,9 @@ def geo_difference(a, b, method: str = "expr"):
     return _dec_wrap(_bind(_setop_ctx(a, b), body), gtype=6)
 
 
-def geo_union(a, b, method: str = "expr"):
+def geo_union(a, b):
     """Binary geometric union — reference GeoUnion (geospatial.py:362).
-    ``method="batch"`` — see geo_intersection: same results where this
+    geo_setops_batch — see geo_intersection: same results where this
     path answers, plus non-convex hole-free pairs (nested result rings
     become holes).  Returns a decoded MULTIPOLYGON:
 
@@ -6228,10 +5245,6 @@ def geo_union(a, b, method: str = "expr"):
       a, [a] when a covers b, else [a] + the b \\ a pieces (area-exact
       covering; seam boundaries not dissolved — section comment);
     - anything else returns NULL."""
-    if method == "batch":
-        return _setop_batch(a, b, "union", gtype_hint=6)
-    if method != "expr":
-        raise ValueError(f"method must be 'expr' or 'batch', got {method!r}")
 
     def body(s):
         da, db = s["da"], s["db"]
@@ -6393,102 +5406,51 @@ def _utm_zone_of(code: int):
     return None
 
 
+def _gate_xy(out, ok):
+    """struct(x, y) ``out`` with both fields NULL where ``ok`` fails —
+    the domain gate of the projections built on the TM series."""
+    nd = F.lit(None).cast("double")
+    return _let(
+        out,
+        lambda o: F.struct(
+            F.when(ok, o["x"]).otherwise(nd).alias("x"),
+            F.when(ok, o["y"]).otherwise(nd).alias("y"),
+        ),
+    )
+
+
 def _utm_fwd(zone: int, south: bool):
-    a, f = _WGS84_A, _WGS84_F
-    e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2)
-    k0 = 0.9996
-    lam0 = math.radians(zone * 6 - 183)
+    """EPSG:326xx/327xx forward: _tm_fwd_gen on WGS84 with the UTM
+    parameters (k0 0.9996, origin on the equator at the zone's central
+    meridian, false easting 500 km, false northing 10,000 km in the
+    south) — bit-identical to the series spelled out for UTM alone.
+    Gated on UTM's defined band plus the series' accurate longitude
+    reach (the 3rd-order series DIVERGES far out of zone — NULL beats a
+    wrong coordinate)."""
+    lon0 = zone * 6 - 183
+    tm = _tm_fwd_gen(
+        _WGS84_A, _WGS84_F, 0.9996, 0.0, lon0, 500000.0,
+        10000000.0 if south else 0.0,
+    )
 
     def fxy(px, py):
-        def with_t(t):
-            sphi, cphi, tphi, lam = t["s"], t["c"], t["t"], t["l"]
-            N = F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(e2) * sphi * sphi)
-            T = tphi * tphi
-            C = F.lit(ep2) * cphi * cphi
-            A = cphi * (lam - F.lit(lam0))
-            phi = F.radians(py)
-            M = F.lit(a) * (
-                F.lit(1 - e2 / 4 - 3 * e2**2 / 64 - 5 * e2**3 / 256) * phi
-                - F.lit(3 * e2 / 8 + 3 * e2**2 / 32 + 45 * e2**3 / 1024)
-                * F.sin(phi * 2)
-                + F.lit(15 * e2**2 / 256 + 45 * e2**3 / 1024) * F.sin(phi * 4)
-                - F.lit(35 * e2**3 / 3072) * F.sin(phi * 6)
-            )
-            A2 = A * A
-            x = (
-                F.lit(k0)
-                * N
-                * (
-                    A
-                    + (F.lit(1.0) - T + C) * A * A2 / F.lit(6.0)
-                    + (
-                        F.lit(5.0)
-                        - F.lit(18.0) * T
-                        + T * T
-                        + F.lit(72.0) * C
-                        - F.lit(58.0 * ep2)
-                    )
-                    * A
-                    * A2
-                    * A2
-                    / F.lit(120.0)
-                )
-                + F.lit(500000.0)
-            )
-            y = F.lit(k0) * (
-                M
-                + N
-                * tphi
-                * (
-                    A2 / F.lit(2.0)
-                    + (F.lit(5.0) - T + F.lit(9.0) * C + F.lit(4.0) * C * C)
-                    * A2
-                    * A2
-                    / F.lit(24.0)
-                    + (
-                        F.lit(61.0)
-                        - F.lit(58.0) * T
-                        + T * T
-                        + F.lit(600.0) * C
-                        - F.lit(330.0 * ep2)
-                    )
-                    * A2
-                    * A2
-                    * A2
-                    / F.lit(720.0)
-                )
-            )
-            if south:
-                y = y + F.lit(10000000.0)
-            # domain gate: UTM's defined band plus the series'
-            # accurate longitude reach (the 3rd-order series DIVERGES
-            # far out of zone — NULL beats a wrong coordinate)
-            ok = (
-                (F.abs(px - F.lit(zone * 6 - 183)) <= F.lit(9.0))
-                & (py >= F.lit(-80.0))
-                & (py <= F.lit(84.0))
-            )
-            nd = F.lit(None).cast("double")
-            return F.struct(
-                F.when(ok, x).otherwise(nd).alias("x"),
-                F.when(ok, y).otherwise(nd).alias("y"),
-            )
-
-        return _let(
-            F.struct(
-                F.sin(F.radians(py)).alias("s"),
-                F.cos(F.radians(py)).alias("c"),
-                F.tan(F.radians(py)).alias("t"),
-                F.radians(px).alias("l"),
-            ),
-            with_t,
+        ok = (
+            (F.abs(px - F.lit(lon0)) <= F.lit(9.0))
+            & (py >= F.lit(-80.0))
+            & (py <= F.lit(84.0))
         )
+        return _gate_xy(tm(px, py), ok)
 
     return fxy
 
 
 def _utm_inv(zone: int, south: bool):
+    """EPSG:326xx/327xx inverse.  Kept apart from _tm_inv_gen: that
+    spelling reaches the footpoint arc as (m0 + (y - fn)/k0)/(a*c0),
+    this one as y/(k0*a*c0), and about one output in five differs in
+    the last ulp (zone 1 N, (1360244.6931193098, -8338048.957378799):
+    lon -149.20144662989998 here, -149.20144662989995 there), which
+    the UTM oracle's strict hash would see."""
     a, f = _WGS84_A, _WGS84_F
     e2 = f * (2.0 - f)
     ep2 = e2 / (1.0 - e2)
@@ -6701,9 +5663,9 @@ def _tm_series_consts(a, f, k0, lat0, lon0):
 
 
 def _tm_fwd_gen(a, f, k0, lat0, lon0, fe, fn):
-    """Generalized Snyder transverse-Mercator forward (the _utm_fwd
-    series with arbitrary ellipsoid, scale, and false origin).  No
-    domain gate here — the CRS wrapper gates on ITS box."""
+    """Snyder transverse-Mercator forward with arbitrary ellipsoid,
+    scale and false origin — behind UTM (_utm_fwd) and the BNG.  No
+    domain gate here — the CRS wrapper gates on ITS box (_gate_xy)."""
     e2, ep2, c0, c1, c2, c3, lam0, m0 = _tm_series_consts(
         a, f, k0, lat0, lon0
     )
@@ -6892,15 +5854,7 @@ def _osgb_fwd(px, py):
             lambda m: tm(m["x"], m["y"]),
         )),
     )
-    nd = F.lit(None).cast("double")
-
-    def gate(o):
-        return F.struct(
-            F.when(ok, o["x"]).otherwise(nd).alias("x"),
-            F.when(ok, o["y"]).otherwise(nd).alias("y"),
-        )
-
-    return _let(out, gate)
+    return _gate_xy(out, ok)
 
 
 def _osgb_inv(px, py):
@@ -6927,15 +5881,7 @@ def _osgb_inv(px, py):
             ),
         ),
     )
-    nd = F.lit(None).cast("double")
-
-    def gate(o):
-        return F.struct(
-            F.when(ok, o["x"]).otherwise(nd).alias("x"),
-            F.when(ok, o["y"]).otherwise(nd).alias("y"),
-        )
-
-    return _let(out, gate)
+    return _gate_xy(out, ok)
 
 
 # -- EPSG:2154 Lambert-93 (r14) ----------------------------------------------
@@ -7204,9 +6150,7 @@ def geo_buffer(g, radius, quad_segs: int = 8):
     if quad_segs < 1:
         raise ValueError("quad_segs must be >= 1")
     n = 4 * int(quad_segs)
-    d = _dec_of(g)
-    if d is None:
-        d = _decode_struct(unwrap(g))
+    d = _as_dec(g)
     r = unwrap(radius)
     r = r.cast("double") if hasattr(r, "cast") else F.lit(float(radius))
     step = 2.0 * math.pi / n
@@ -7443,83 +6387,6 @@ def geo_transform(g, srid, *, source_srid=None):
     return _dec_wrap(_bind(dec, choose))
 
 
-def _setop_batch(a, b, op: str, gtype_hint=None):
-    """Arrow-batched set-op path (``method="batch"``): one struct-in/
-    struct-out pandas UDF per op over the decoded forms, kernels in
-    geo_batch.py.  Two reasons to choose it over the expression
-    default (SCALE.md round 12 named this lever):
-
-    - native-loop arithmetic replaces the interpreted S-H folds
-      (IEEE-identical results on every input the expression path
-      answers — parity-fuzzed);
-    - NON-CONVEX clip sides work (Greiner-Hormann over hole-free
-      simple pairs; degenerate boundary contact degrades to NULL,
-      never a wrong ring) where the expression path only degrades.
-
-    Same scale shape as the expression path: per-row independent,
-    scan-local, shuffle-free — plus one Arrow batch hop."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from . import geo_batch as _gb
-
-    # the UDF takes WKB BYTES: raw for WKB inputs, the staged encoder
-    # for decoded inputs.  NOT the decoded struct — a _let inside a
-    # lambda body in the argument tree (e.g. _decode_parts's ring
-    # walk) defeats ExtractPythonUDFs and the plan dies at execution
-    # with INTERNAL_ERROR (probed; see geo_batch.py module comment).
-    def _wkb_arg(g):
-        src = getattr(g, "_src_wkb", None)
-        if src is not None:
-            return src
-        if _dec_of(g) is not None:
-            raise ValueError(
-                "method='batch' takes WKB input (a bytes column, or "
-                "geo_decode(col) which short-circuits to its source "
-                "bytes).  For constructed or stored DECODED geometry "
-                "use geo_setops_batch(table, ...): the Spark 4.1 "
-                "optimizer can silently leave a scalar-pandas UDF with "
-                "a computed argument tree unextracted once any other "
-                "Python UDF has been optimized in the session — the "
-                "query then dies at execution (probed; SCALE.md round "
-                "12).  The table-level mapInPandas path has no "
-                "extraction step and is immune."
-            )
-        return unwrap(g)
-
-    aw, bw = _wkb_arg(a), _wkb_arg(b)
-
-    def run(ga, gb):
-        out_g, out_p = [], []
-        for awkb, bwkb in zip(ga, gb):
-            r = _gb.setop_wkb(op, awkb, bwkb)
-            if r is None:
-                out_g.append(None)
-                out_p.append(None)
-            else:
-                out_g.append(r[0])
-                out_p.append(
-                    [[{"x": x, "y": y} for (x, y) in P] for P in r[1]]
-                )
-        return pd.DataFrame({"gtype": out_g, "parts": out_p})
-
-    run.__annotations__ = {
-        "ga": pd.Series,
-        "gb": pd.Series,
-        "return": pd.DataFrame,
-    }
-    res = pandas_udf(run, _DEC_T)(aw, bw)
-    # a pandas UDF can't emit a NULL STRUCT row (only null fields) —
-    # normalize null-gtype rows back to the NULL decoded contract.
-    # The double reference is safe: ExtractPythonUDFs dedupes equal
-    # PythonUDF calls into ONE ArrowEvalPython column (plan-tested),
-    # and a UDF can't sit inside a _bind/_let HOF lambda.
-    return _dec_wrap(
-        F.when(res["gtype"].isNull(), _null_dec()).otherwise(res),
-        gtype=gtype_hint,
-    )
-
-
 def _flat_geom_cols(tag: str):
     """FLAT staging columns (gtype + flattened coordinate arrays +
     per-part lengths) of the decoded geometry staged as column
@@ -7559,14 +6426,9 @@ def _stage_flat(df, keep, geoms, extra=None):
     columns.  Each geometry is decoded into ``__d{tag}`` by one
     projection and flattened by the next — single staging."""
     extra = extra or {}
-
-    def dec(g):
-        d = _dec_of(g)
-        return d if d is not None else _decode_struct(unwrap(g))
-
     decoded = df.select(
         *[F.col(c) for c in keep],
-        *[dec(g).alias(f"__d{tag}") for tag, g in geoms],
+        *[_as_dec(g).alias(f"__d{tag}") for tag, g in geoms],
         *[c.alias(n) for n, c in extra.items()],
     )
     return decoded.select(
@@ -7622,7 +6484,7 @@ def geo_setops_batch(
     overhead at sf0.1 row counts, measured r14 — chaining stages for
     independent pairs pays it per pair).
 
-    Why a table operation and not ``method="batch"``: a scalar-pandas
+    Why a table operation and not a scalar pandas UDF: a scalar-pandas
     UDF whose ARGUMENT is a computed expression tree can be silently
     left unextracted by the Spark 4.1 optimizer once any other Python
     UDF has been optimized in the same session — the plan then fails
@@ -7837,8 +6699,7 @@ def geo_multilinestring(*lines):
     empty multilinestring.  Sibling of geo_multipolygon."""
     ds = []
     for p in lines:
-        d = _dec_of(p)
-        ds.append(d if d is not None else _decode_struct(unwrap(p)))
+        ds.append(_as_dec(p))
     if not ds:
         return _dec_wrap(_dec_geom(5, _empty_parts()), gtype=5)
 
@@ -8014,9 +6875,7 @@ def geo_line_merge(g):
     line, else MULTILINESTRING; linestrings pass through; other types
     NULL.  Pure expression fold (n-1 first-mergeable-pair passes over
     the decoded parts) — scan-local, per-row independent."""
-    d = _dec_of(g)
-    if d is None:
-        d = _decode_struct(unwrap(g))
+    d = _as_dec(g)
 
     def body(s):
         gt, parts = s["gtype"], s["parts"]

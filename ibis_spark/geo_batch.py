@@ -1,9 +1,9 @@
 """Pure-Python geometry engine behind the Arrow-batched set-op path.
 
-``geo_intersection/geo_difference/geo_union(..., method="batch")``
-route each row through :func:`setop` inside a struct-in/struct-out
-pandas UDF (geo.py wires the UDF; this module is Spark-free so the
-row kernels unit-test without a session).
+``geo_setops_batch``/``geo_setops_batch_multi`` route each row through
+:func:`setop` inside one mapInPandas stage (geo.py wires the stage;
+this module is Spark-free so the row kernels unit-test without a
+session).
 
 Two kernels:
 
@@ -56,88 +56,12 @@ from __future__ import annotations
 #   (geo.py _mp_separator).
 
 import math
-import struct as _s
 
 import numpy as _np
 
 OP_INTERSECTION = "intersection"
 OP_DIFFERENCE = "difference"
 OP_UNION = "union"
-
-
-# ---------------------------------------------------------------------------
-# WKB -> decoded (gtype, parts).  The batch UDF takes WKB BYTES, not
-# the decoded struct: a decoded-struct argument whose expression tree
-# carries a _let inside another lambda's body (geo.py _decode_parts's
-# ring walk) defeats Spark's ExtractPythonUDFs — the PythonUDF is left
-# inside the projection and execution dies with INTERNAL_ERROR
-# "Cannot evaluate expression" (probed on Spark 4.1, SCALE.md round
-# 12).  Raw bytes sidestep the hazard for WKB inputs entirely and the
-# staged encoder (geo.py _ring_hex: "_let in VALUE position only") is
-# extraction-safe for decoded inputs.
-
-
-def _dec_double(raw, off):
-    """The decode-side domain gate of geo.py _wkb_double: the +0 image
-    is 0.0; denormals/NaN/Inf/-0/out-of-exact-domain decode to None."""
-    if raw[off : off + 8] == b"\x00\x00\x00\x00\x00\x00\x00\x00":
-        return 0.0
-    v = _s.unpack_from("<d", raw, off)[0]
-    if v != v or math.isinf(v):
-        return None
-    # gate on the RAW biased exponent field e in [-61, 61] EXACTLY as
-    # _double_from_hex16 does (ADVICE r12: the |v| magnitude compare
-    # excluded (2^61, 2^62), breaking expression<->batch parity; a
-    # frexp spelling would mis-gate -0/denormals, which the raw field
-    # sends to -1023 -> None on both paths)
-    bits = _s.unpack_from("<Q", raw, off)[0]
-    e = ((bits >> 52) & 0x7FF) - 1023
-    if not (-61 <= e <= 61):
-        return None
-    return v
-
-
-def parse_wkb_polygon(wkb):
-    """(3, rings) for a little-endian WKB POLYGON within the codec
-    domain, else None — the only type the set ops accept (everything
-    else is NULL on both paths)."""
-    if wkb is None or len(wkb) < 9 or wkb[0] != 1:
-        return None
-    tw = _s.unpack_from("<I", wkb, 1)[0]
-    off = 9
-    if tw & 0x20000000 and not tw & 0xC0000000:
-        # EWKB SRID flag (r13): skip the 4-byte SRID, keep the base
-        # type — mirrors the expression path's _ewkb_norm ingest
-        tw &= 0x1FFFFFFF
-        off += 4
-    if tw != 3:
-        return None
-    if len(wkb) < off:
-        # Truncated EWKB: the SRID skip moved off to 13 but the buffer
-        # ended inside the SRID/nrings words — NULL, not struct.error
-        # (one malformed row must not kill the batch UDF).
-        return None
-    nrings = _s.unpack_from("<I", wkb, off - 4)[0]
-    rings = []
-    for _ in range(nrings):
-        if off + 4 > len(wkb):
-            return None
-        npts = _s.unpack_from("<I", wkb, off)[0]
-        off += 4
-        if npts == 0 or off + 16 * npts > len(wkb):
-            return None
-        ring = []
-        for i in range(npts):
-            x = _dec_double(wkb, off)
-            y = _dec_double(wkb, off + 8)
-            if x is None or y is None:
-                return None
-            ring.append((x, y))
-            off += 16
-        rings.append(ring)
-    if off != len(wkb) or not rings:
-        return None
-    return (3, rings)
 
 
 # ---------------------------------------------------------------------------
@@ -986,24 +910,19 @@ def _general_setop(op, aP, bP):
 # exactly for convex clips and extending to _general_setop otherwise.
 
 
-def setop_wkb(op, awkb, bwkb):
-    """One set-op row over WKB POLYGON inputs — the batch UDF's row
-    kernel.  Non-polygon / malformed / out-of-domain input is NULL on
-    both paths (decode contract)."""
-    return setop(op, parse_wkb_polygon(awkb), parse_wkb_polygon(bwkb))
-
-
 def setop(op, ga, gb):
     """One set-op row: ``ga``/``gb`` are decoded ``(gtype, parts)``
     tuples or None.  Returns decoded ``(gtype, parts)`` or None —
     IEEE-identical to the expression path wherever that path is
     non-NULL, a real result where it degrades (non-convex clip over
-    hole-free simple inputs), and None otherwise."""
+    hole-free simple inputs), and None otherwise.  A polygon with no
+    ring (what geo_decode makes of a truncated polygon header) is None
+    too: one malformed row must not raise out of the batch."""
     if ga is None or gb is None:
         return None
     agt, aparts = ga
     bgt, bparts = gb
-    if agt != 3 or bgt != 3:
+    if agt != 3 or bgt != 3 or not aparts or not bparts:
         return None
     bring = bparts[0] if bparts else None
 

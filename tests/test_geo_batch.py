@@ -1,6 +1,6 @@
 """The Arrow-batched set-op path (round 12, SCALE.md's named lever):
-``geo_intersection/geo_difference/geo_union(..., method="batch")`` —
-reference GeoUnion/GeoDifference/GeoIntersection
+``geo_setops_batch``/``geo_setops_batch_multi`` — reference
+GeoUnion/GeoDifference/GeoIntersection
 (ibis/expr/operations/geospatial.py:362-468).
 
 Three layers of evidence:
@@ -25,6 +25,7 @@ from __future__ import annotations
 import math
 import random
 import struct
+from types import SimpleNamespace
 
 import pytest
 
@@ -262,20 +263,22 @@ def batch_vs_expr(con):
     rows.append((j + 2, _poly_wkb(_sq(-1, 3, 8)), _poly_wkb([(float(x), float(y)) for x, y in U6])))
 
     t = con.memtable(rows, schema={"i": "int64", "a": "binary", "b": "binary"})
-    # batch args: geo_decode(col) short-circuits to the raw bytes —
-    # the extraction-safe spelling (see _setop_batch's contract)
-    cols = {}
-    for op, fn in (
-        ("in", geo.geo_intersection),
-        ("df", geo.geo_difference),
-        ("un", geo.geo_union),
-    ):
-        cols[f"e_{op}"] = geo.geo_encode(fn(geo.geo_decode(t.a), geo.geo_decode(t.b)))
-        cols[f"b_{op}"] = geo.geo_encode(
-            fn(geo.geo_decode(t.a), geo.geo_decode(t.b), method="batch")
-        )
-    out = t.mutate(**cols).select("i", *cols).df.collect()
-    return {r.i: r for r in out}
+    da, db = geo.geo_decode(t.a), geo.geo_decode(t.b)
+    expr = t.select(
+        "i",
+        e_in=geo.geo_encode(geo.geo_intersection(da, db)),
+        e_df=geo.geo_encode(geo.geo_difference(da, db)),
+        e_un=geo.geo_encode(geo.geo_union(da, db)),
+    ).df.collect()
+    out = geo.geo_setops_batch(t, da, db, keep=["i"], names=["b_in", "b_df", "b_un"])
+    batch = out.select(
+        "i",
+        b_in=geo.geo_encode(out.b_in),
+        b_df=geo.geo_encode(out.b_df),
+        b_un=geo.geo_encode(out.b_un),
+    ).df.collect()
+    b_of = {r.i: r.asDict() for r in batch}
+    return {r.i: SimpleNamespace(**{**r.asDict(), **b_of[r.i]}) for r in expr}
 
 
 class TestBatchSparkParity:
@@ -585,24 +588,34 @@ class TestPolylineBuffer:
         )
 
 
-def test_truncated_ewkb_polygon_is_null_not_crash():
+def test_truncated_ewkb_polygon_is_null_not_crash(con):
     """ADVICE r13: byte0=0x01 + SRID flag set but length 9-12 used to
-    raise struct.error out of the nrings read (off moved to 13, buffer
-    ended inside the SRID word) and kill the whole batch UDF.  Every
-    truncation point must be NULL."""
+    raise out of the batch kernel's own WKB reader and kill the whole
+    batch.  The batch path now reads geometry through geo_decode: every
+    truncation point is a NULL row, and a well-formed EWKB polygon in
+    the same batch still answers."""
     import struct as s
 
+    from ibis_spark import geo
+
     tw = s.pack("<I", 3 | 0x20000000)
-    for extra in range(0, 4):
-        wkb = bytes([1]) + tw + b"\x00" * extra
-        assert gb.parse_wkb_polygon(wkb) is None
-    # a well-formed EWKB polygon still parses
+    rows = [(i, bytes([1]) + tw + b"\x00" * i) for i in range(4)]
     ring = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 0.0)]
     body = s.pack("<I", 1) + s.pack("<I", len(ring)) + b"".join(
         s.pack("<dd", x, y) for x, y in ring
     )
-    ok = bytes([1]) + tw + s.pack("<I", 4326) + body
-    assert gb.parse_wkb_polygon(ok) == (3, [ring])
+    rows.append((4, bytes([1]) + tw + s.pack("<I", 4326) + body))
+    far = _poly_wkb(_sq(20, 20, 2))
+    t = con.memtable(
+        [(i, g, far) for i, g in rows],
+        schema={"i": "int64", "g": "binary", "f": "binary"},
+    )
+    out = geo.geo_setops_batch(
+        t, geo.geo_decode(t.g), geo.geo_decode(t.f),
+        ops=("difference",), names=["d"], keep=["i"],
+    )
+    got = {r.i: r.a for r in out.select("i", a=geo.geo_area(out.d)).df.collect()}
+    assert got == {0: None, 1: None, 2: None, 3: None, 4: 0.5}
 
 
 def test_buffer_ring_self_crossing_degrades():
@@ -621,24 +634,6 @@ def test_buffer_ring_self_crossing_degrades():
          (5.0, 3.0), (5.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
     assert gb.buffer_geom((3, [C]), 1.5) is None  # gap (2.0) < 2r
     assert gb.buffer_geom((3, [C]), 0.5) is not None
-
-
-def test_dec_double_exponent_gate_matches_expression_path():
-    """ADVICE r12: the batch decoder's magnitude gate excluded
-    (2^61, 2^62) that the expression gate (biased exponent in
-    [-61, 61]) accepts.  Both gates are now the exponent form."""
-    import struct as s
-
-    from ibis_spark import geo_batch as gb_
-
-    def dec(v):
-        return gb_._dec_double(s.pack("<d", v), 0)
-
-    for v in (3e18, 2.0**61, 2.0**61 * 1.999, -3.5e18):
-        assert dec(v) == v  # e == 61: in-domain on BOTH paths
-    for v in (2.0**62, 5e18, -2.0**62, 2.0**-62, float("inf"), -0.0):
-        assert dec(v) is None
-    assert dec(0.0) == 0.0
 
 
 def test_setops_batch_rejects_name_collisions(con):
@@ -665,14 +660,10 @@ def test_batch_arg_contract_and_flip_robustness(con):
     scalar-pandas UDF whose argument is a COMPUTED expression tree can
     be silently left unextracted by the optimizer once any other
     Python UDF has been optimized in the session (the plan then dies
-    at execution).  The engine's contract:
-
-    - WKB inputs (raw bytes column, or geo_decode(col) which
-      short-circuits to the bytes) stay on the column path — those
-      plain arguments always extract, INCLUDING in a flipped session;
-    - constructed/decoded geometry must go through geo_setops_batch
-      (mapInPandas — no extraction step) — the column path REFUSES it
-      at build time rather than failing at execution.
+    at execution).  The batch set ops are therefore a table operation
+    (geo_setops_batch, mapInPandas — no extraction step), and they
+    answer in a flipped session for both WKB input (geo_decode of a
+    bytes column) and constructed decoded geometry.
 
     This test force-flips the session with a trivial pandas UDF first,
     so it holds regardless of suite order."""
@@ -698,15 +689,11 @@ def test_batch_arg_contract_and_flip_robustness(con):
 
     rows = [(1, _poly_wkb(_sq(0, 0, 4)), _poly_wkb(_sq(2, 0, 4)))]
     t = con.memtable(rows, schema={"i": "int64", "a": "binary", "b": "binary"})
-    r1 = (
-        t.mutate(
-            g=geo.geo_intersection(
-                geo.geo_decode(t.a), geo.geo_decode(t.b), method="batch"
-            )
-        )
-        .select("i", "g")
-        .df.collect()
+    w = geo.geo_setops_batch(
+        t, geo.geo_decode(t.a), geo.geo_decode(t.b),
+        ops=("intersection",), names=["g"], keep=["i"],
     )
+    r1 = w.select("i", "g").df.collect()
     assert r1[0].g.gtype == 3
 
     z = (t.i - t.i).cast("float64")
@@ -719,9 +706,6 @@ def test_batch_arg_contract_and_flip_robustness(con):
         ib.array(z, z, z + 4.0, z + 4.0),
         decoded=True,
     )
-    with pytest.raises(ValueError, match="geo_setops_batch"):
-        geo.geo_union(A, B, method="batch")
-
     out = geo.geo_setops_batch(t, A, B, keep=["i"])
     res = out.mutate(
         ia=geo.geo_area(out["intersection"]),
@@ -777,20 +761,6 @@ def test_setops_batch_table_parity_and_nonconvex(con):
     out2 = geo.geo_setops_batch(t2, A2, L, ops=("intersection",), names=["gi"])
     r2 = out2.mutate(ia=geo.geo_area(out2.gi)).select("i", "ia").df.collect()
     assert r2[0].ia == 7.0
-
-
-def test_batch_plan_single_python_eval(con, tmp_path):
-    """The batch path is ONE ArrowEvalPython per op — no extra Python
-    round-trips from the null-normalization wrapper."""
-    from ibis_spark import geo
-
-    rows = [(1, _poly_wkb(_sq(0, 0, 4)), _poly_wkb(_sq(2, 0, 4)))]
-    t = con.memtable(rows, schema={"i": "int64", "a": "binary", "b": "binary"})
-    out = t.mutate(
-        g=geo.geo_intersection(geo.geo_decode(t.a), geo.geo_decode(t.b), method="batch")
-    ).select("i", "g")
-    plan = out.df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1
 
 
 class TestCrossingHoles:

@@ -318,14 +318,21 @@ class TestEwkbInput:
         assert r.y == pytest.approx(55.0, abs=1e-9)
 
     def test_batch_setop_accepts_ewkb(self, con):
-        """parse_wkb_polygon strips the EWKB SRID header like the
-        expression path (geo_batch parity)."""
-        from ibis_spark import geo_batch as gb
-
+        """The batch set ops read EWKB through geo_decode, which strips
+        the SRID header: a tagged polygon answers like its plain twin."""
         plain = wkb_poly([SQ])
         tagged = ewkb(plain, 4326)
-        assert gb.parse_wkb_polygon(tagged) == gb.parse_wkb_polygon(plain)
-        assert gb.parse_wkb_polygon(tagged) is not None
+        far = wkb_poly([[(x + 20.0, y + 20.0) for x, y in SQ]])
+        t = con.memtable(
+            [(1, plain, far), (2, tagged, far)],
+            schema={"id": "int64", "g": "binary", "f": "binary"},
+        )
+        out = geo.geo_setops_batch(
+            t, geo.geo_decode(t.g), geo.geo_decode(t.f),
+            ops=("union",), names=["u"], keep=["id"],
+        )
+        r = out.select("id", a=geo.geo_area(out.u)).df.collect()
+        assert {x.id: x.a for x in r} == {1: 32.0, 2: 32.0}
 
 
 class TestCollectionTransform:

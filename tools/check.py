@@ -6,7 +6,10 @@ compares row count, column names, and values (order-insensitive; exact for
 non-floats, and both exact and 1e-9-relative for floats so we can spot
 entries that need explicit rounding to survive a strict value-hash).
 
-Usage: PYTHONPATH=/root/repo python /root/repo/tools/check.py [--strict] [name ...]
+Usage: python tools/check.py [--strict] [name ...]
+
+The checkout that holds this script is put first on ``sys.path``, so a
+second checkout (a parent commit, a scratch copy) checks its own code.
 
 ``--strict`` mirrors the driver's byte-hash exactly (VERDICT r7 item 2):
 every float is canonicalized to ``repr`` (so a single-ulp difference, or
@@ -72,7 +75,7 @@ def main():
 
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
 
     spark = (
