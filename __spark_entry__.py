@@ -36,8 +36,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str):
     if sf_dir.startswith("catalog:"):
         # "catalog:<prefix>" reads registered tables "<prefix><name>"
         # instead of parquet paths — the bucketed-fixture path
-        # (tools/bench_sf10_bucketed.py registers CLUSTERED BY tables,
-        # whose storage-partitioned joins skip the exchange+sort).
+        # (bench.py registers a bucketed directory's CLUSTERED BY
+        # tables, whose storage-partitioned joins skip the
+        # exchange+sort).
         # refreshTable first: repeated spark.table() calls share the
         # catalog's cached attribute IDs, so a self-join built from
         # two _t calls (q8's nation x nation) trips Spark's ambiguous
@@ -4846,6 +4847,18 @@ def _ds_sales_growth_pairs(spark, sf_dir):
 
 
 _SAMPLE_WINDOW = [
+    # r15 rotation: the nine entries whose latest sampled evidence is
+    # still r9 — the alphabetical tail of the r14 backlog below, which
+    # a 50-query sample did not reach — move to the front.
+    "table_cast",
+    "temporal_arith",
+    "text_stats",
+    "tfidf",
+    "timestamp_bucket",
+    "udf_pyarrow",
+    "unnest_tokens",
+    "week_doy",
+    "window_percent",
     # r14 rotation. Slots: (1) the 3 NEW entries (erosion/holed/MULTI*
     # buffers; EPSG:27700; EPSG:2154), (2) 10 entries whose machinery
     # or emission changed this round (geo_buffer_polygon_report:
@@ -4855,10 +4868,9 @@ _SAMPLE_WINDOW = [
     # guards, the crossing-holes and multi-edge kernel classes and
     # their new fixture groups incl. clip_general's s=1 answering;
     # q5/q10/q17/q14 after the join-order/pre-aggregate/window
-    # rewrites), (3) ALL 46 r9-stale oracled queries (the complete
-    # backlog — post-r14 evidence floor moves to r10; if the driver
-    # samples only 50, the alphabetical tail rolls to r15).
-    # 3+10+46 = 59.
+    # rewrites), (3) the r9-stale oracled queries (46 in r14; the
+    # nine of its alphabetical tail that a 50-query sample missed now
+    # lead the window, the other 37 follow here).
     # -- (1) new r14 entries --
     "geo_buffer_erosion_report",
     "geo_convert_osgb_report",
@@ -4874,7 +4886,7 @@ _SAMPLE_WINDOW = [
     "q10_returned_items",
     "q17_small_quantity",
     "q14_promo_revenue",
-    # -- (3) the 46 r9-stale oracled queries (full backlog) --
+    # -- (3) the rest of the r14 r9-stale backlog --
     "corpus_divergence",
     "ds_channel_except",
     "ds_channel_intersect",
@@ -4912,15 +4924,6 @@ _SAMPLE_WINDOW = [
     "selector_if_any",
     "selectors_across",
     "stats",
-    "table_cast",
-    "temporal_arith",
-    "text_stats",
-    "tfidf",
-    "timestamp_bucket",
-    "udf_pyarrow",
-    "unnest_tokens",
-    "week_doy",
-    "window_percent",
 ]
 
 

@@ -188,77 +188,6 @@ def _pow2(e):
     return F.when(e >= 0, mag).otherwise(F.lit(1.0) / mag)
 
 
-def _hex16_expr(xcol):
-    """16-hex-char big-endian IEEE-754 image of a DOUBLE column.
-
-    Exponent: exact integer floor-log2 — bit length of floor(|x|) for
-    |x| >= 1, else of floor(|x| * 2**61); the multiply can land one off
-    at a power-of-two boundary, fixed by an exact one-step correction.
-    Mantissa: (f - 1) is Sterbenz-exact for f in [1, 2), and * 2**52 is
-    an exact scale, so the 52 stored bits are recovered exactly.
-    NULL outside [2**-61, 2**61] (0.0 canonicalizes to +0).
-
-    The exponent/fraction chain is LET-BOUND (_let): the naive
-    spelling re-expanded e0 inside f0 inside e1/f1 inside m52/top12 —
-    ~400 plan nodes per coordinate and the same subtrees re-evaluated
-    per row — where this shape is ~100 nodes with each stage computed
-    once (r10; the polygon constructor embeds two of these per
-    vertex)."""
-    x = xcol.cast("double")
-    ax = F.abs(x)
-    hi = F.floor(ax).cast("bigint")
-    e0 = (
-        F.when(hi >= 1, (F.length(F.bin(hi)) - F.lit(1)).cast("int"))
-        .otherwise(
-            (
-                F.length(F.bin(F.floor(ax * F.lit(_P61)).cast("bigint")))
-                - F.lit(62)
-            ).cast("int")
-        )
-    )
-
-    def fin(ef):
-        m52 = ((ef["f"] - F.lit(1.0)) * F.lit(_P52)).cast("bigint")
-        top12 = (
-            F.when(x < 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2048)
-            + ef["e"]
-            + F.lit(1023)
-        ).cast("bigint")
-        return F.concat(
-            F.lpad(F.lower(F.hex(top12)), 3, "0"),
-            F.lpad(F.lower(F.hex(m52)), 13, "0"),
-        )
-
-    def norm(s):
-        e0v, f0v = s["e"], s["f"]
-        return _let(
-            F.struct(
-                F.when(f0v >= 2.0, e0v + F.lit(1))
-                .when(f0v < 1.0, e0v - F.lit(1))
-                .otherwise(e0v)
-                .alias("e"),
-                F.when(f0v >= 2.0, f0v / F.lit(2.0))
-                .when(f0v < 1.0, f0v * F.lit(2.0))
-                .otherwise(f0v)
-                .alias("f"),
-            ),
-            fin,
-        )
-
-    hex16 = _let(
-        e0,
-        lambda e0b: _let(
-            F.struct(e0b.alias("e"), (ax / _pow2(e0b)).alias("f")), norm
-        ),
-    )
-    return (
-        F.when(x.isNull() | F.isnan(x), F.lit(None).cast("string"))
-        .when(x == 0.0, F.lit(_ZERO16))
-        .when((ax < F.lit(2.0**-61)) | (ax > F.lit(_P61)), F.lit(None).cast("string"))
-        .otherwise(hex16)
-    )
-
-
 def _wkb_double(wkb, pos: int):
     """Decode the little-endian 8-byte double starting at 1-based byte
     ``pos`` of a WKB binary column — exact, and DELIBERATELY frugal with
@@ -321,16 +250,15 @@ def _ieee_hex16(xcol):
     JVM's own ``Double.doubleToLongBits`` (SQL ``reflect`` — JVM-side,
     no Python).  Bit-exact over the SHARED encoder domain (zero and
     |x| in [2**-61, 2**61]); NaN/Inf/denormals return NULL exactly as
-    _hex16_expr does, so the two encoders agree on every input (ADVICE
-    r9: they previously diverged on non-finite coordinates — reflect
-    happily serialized NaN/Inf bit patterns into non-NULL WKB whose
-    coordinates then decoded to NULL downstream).  ~10-node expression
-    tree.  ``reflect`` is conservatively marked nondeterministic by
+    the array encoder (_vhex_arr) does, so the two encoders agree on
+    every input (ADVICE r9: they previously diverged on non-finite
+    coordinates — reflect happily serialized NaN/Inf bit patterns into
+    non-NULL WKB whose coordinates then decoded to NULL downstream).
+    ~10-node expression tree.  ``reflect`` is conservatively marked nondeterministic by
     Spark, which as a bonus stops predicate pushdown from inlining the
-    encode tree into downstream predicates — the arithmetic encode
-    (_hex16_expr, kept for deterministic-plan contexts) expands
-    exponentially under that inlining and OOM'd the optimizer/codegen
-    on filter-over-geo_point queries."""
+    encode tree into downstream predicates — an arithmetic encode
+    expands exponentially under that inlining and OOM'd the
+    optimizer/codegen on filter-over-geo_point queries."""
     # x + 0.0 canonicalizes -0.0 to +0.0 (IEEE round-to-nearest), so both
     # encoders agree on the zero image and geo_x(geo_point(-0.0, ..))
     # decodes to 0.0 instead of the out-of-domain NULL of the -0 image
@@ -353,7 +281,7 @@ def _ieee_hex16(xcol):
     )
 
 
-def geo_point(x, y, *, deterministic: bool = False, decoded: bool = False):
+def geo_point(x, y, *, decoded: bool = False):
     """WKB point (little-endian, geometry type 1) from two DOUBLE
     coordinates — reference GeoPoint. NULL if either coordinate is NULL.
 
@@ -362,32 +290,24 @@ def geo_point(x, y, *, deterministic: bool = False, decoded: bool = False):
     coordinate-domain gate, and every measure accepts it — the scale
     path when the geometry is consumed, not stored.
 
-    Both encoders share ONE domain: bit-exact for 0 and |x| in
-    [2**-61, 2**61], NULL for NaN/Inf/denormals and anything outside —
-    so encoder choice never changes results (ADVICE r9). The default
-    uses JVM ``doubleToLongBits`` via SQL ``reflect``, which carries
-    Spark's conservative nondeterministic marking — fine in
-    Project/Filter (and it blocks the pushdown inlining that blows up
-    plans), but rejected where Catalyst demands determinism (grouping
-    keys, join conditions). ``deterministic=True`` switches to the
-    arithmetic bit-encoder (_hex16_expr): fully deterministic and
-    bit-identical, at a larger expression tree — avoid composing it
-    under a filter over the same computed point (see _wkb_double
-    notes).
-
-    Scale guidance (measured, SCALE.md round 10): the arithmetic
-    encoder is ~1.6x faster per point at the margin (~128 vs ~208 ns
-    on local[32]; reflect is CodegenFallback), so prefer
-    ``deterministic=True`` when encoding FROM STORED COLUMNS — there
-    the pushdown-inlining hazard duplicates a cheap scan reference,
-    not an encode tree. The reflect default exists for composition
-    safety (filters over freshly computed points), not speed. Best at
-    scale: encode once into a stored WKB column; decoding is ~280
-    ns/pt with whole-stage codegen and no hazard either way."""
+    The encoder is the JVM's ``doubleToLongBits`` via SQL ``reflect``
+    (_ieee_hex16): bit-exact for 0 and |x| in [2**-61, 2**61], NULL for
+    NaN/Inf/denormals and anything outside — the one domain every WKB
+    constructor shares (ADVICE r9).  ``reflect`` carries Spark's
+    conservative nondeterministic marking — fine in Project/Filter (and
+    it blocks the pushdown inlining that blows up plans), but rejected
+    where Catalyst demands determinism (grouping keys, join
+    conditions).  There, spell the point
+    ``geo_encode(geo_point(x, y, decoded=True))``: the deterministic
+    array encoder, the same bytes.  It is not the default because under
+    a filter over the same computed point its larger tree is what
+    pushdown inlines (measured on 20k rows, local[4]: plan text 14k ->
+    91k characters, execution 0.63 -> 1.02 s).  Best at scale: encode
+    once into a stored WKB column; decoding is ~280 ns/pt with
+    whole-stage codegen and no hazard either way."""
     if decoded:
         return _dec_wrap(_dec_point_ctor(x, y), gtype=1)
-    enc = _hex16_expr if deterministic else _ieee_hex16
-    hx, hy = enc(unwrap(x)), enc(unwrap(y))
+    hx, hy = _ieee_hex16(unwrap(x)), _ieee_hex16(unwrap(y))
     return wrap(
         F.unhex(F.concat(F.lit("0101000000"), _le_hex(hx), _le_hex(hy)))
     )
@@ -667,13 +587,21 @@ def _hexle_double(h, o: int):
 
 
 def _hex16_arr(xs):
-    """ARRAY of 16-hex-char IEEE-754 images of an ARRAY<DOUBLE> column
-    — the ARRAY-CONTEXT encoder.  Same arithmetic as _hex16_expr
-    (bit-identical output), but each of _hex16_expr's internal _let
-    levels becomes its OWN transform() pass whose lambda input is a
-    leaf variable: the analyzer EXPANDS _let bindings that sit under an
+    """ARRAY of 16-hex-char big-endian IEEE-754 images of an
+    ARRAY<DOUBLE> column — the arithmetic bit-encoder, deterministic
+    and bit-identical to _ieee_hex16.
+
+    Exponent: exact integer floor-log2 — bit length of floor(|x|) for
+    |x| >= 1, else of floor(|x| * 2**61); the multiply can land one off
+    at a power-of-two boundary, fixed by an exact one-step correction.
+    Mantissa: (f - 1) is Sterbenz-exact for f in [1, 2), and * 2**52 is
+    an exact scale, so the 52 stored bits are recovered exactly.
+    NULL outside [2**-61, 2**61] (0.0 canonicalizes to +0).
+
+    Each stage is its OWN transform() pass whose lambda input is a leaf
+    variable: the analyzer EXPANDS _let bindings that sit under an
     outer lambda (resolving the nested LambdaFunction substitutes the
-    bound subtree at every use site), so the single-expression encoder
+    bound subtree at every use site), so a single-expression encoder
     costs ~3x per value inside zip_with/transform (measured 1502 vs
     491 ns/encode on 2M rows) and ~8x the plan text.  Five O(n)
     passes over small structs beat one exploded tree on both axes."""
@@ -1174,7 +1102,6 @@ def geo_cluster(
 # these readers.
 
 _LINE_HDR = bytes.fromhex("0102000000")
-_PT_HDR = bytes.fromhex("0101000000")
 
 
 def _is_pt(u):
@@ -1410,7 +1337,7 @@ def geo_envelope(g):
     (_same_form): decoded for decoded input, WKB for WKB input, whose
     corner bytes round-trip bit-exactly for exact-codec-domain
     input."""
-    return _same_form(g, _dec_envelope)
+    return _same_form(g, _dec_envelope, (1, 2, 3))
 
 
 def _vertex_point(u, base, vi):
@@ -1540,7 +1467,7 @@ def geo_centroid(g):
     total area.  All products are exact for integer-valued coordinates,
     so oracle parity is bit-robust wherever the inputs are.  Returned
     in the input's form (_same_form)."""
-    return _same_form(g, _dec_centroid, gtype=1)
+    return _same_form(g, _dec_centroid, (1,))
 
 
 def geo_flip_coordinates(g):
@@ -1751,7 +1678,7 @@ def geo_line_substring(line, start: float, end: float):
     if not (0.0 <= s_f <= e_f <= 1.0):
         raise ValueError("need 0 <= start <= end <= 1")
     return _same_form(
-        line, lambda dd: _dec_line_substring(dd, s_f, e_f), gtype=2
+        line, lambda dd: _dec_line_substring(dd, s_f, e_f), (2,)
     )
 
 
@@ -2195,9 +2122,11 @@ def _decode_struct(u):
     """Full decoded struct (gtype + parts) of a LE WKB binary column,
     NULL-struct when the type is unsupported or ANY vertex coordinate
     is outside the exact codec domain (see the decode validity
-    contract above)."""
+    contract above).  Types 2-6 carry a uint32 count in bytes 6-9: a
+    value cut off inside it decodes to NULL, not to an empty geometry."""
     gt = (
         F.when(_is_pt(u), F.lit(1))
+        .when(F.octet_length(u) < 9, F.lit(None))
         .when(_is_line(u), F.lit(2))
         .when(_is_poly(u), F.lit(3))
         .when(_is_mpt(u), F.lit(4))
@@ -2423,6 +2352,11 @@ def _dec_wrap(sc, gtype=None):
     return out
 
 
+# every geometry type the decoded form holds: POINT .. MULTIPOLYGON,
+# then GEOMETRYCOLLECTION
+_GTYPES = (1, 2, 3, 4, 5, 6, 7)
+
+
 def _static_gtype_of(g):
     return getattr(g, "_static_gtype", None)
 
@@ -2460,14 +2394,17 @@ def _as_dec(g):
     return d if d is not None else _decode_struct(unwrap(g))
 
 
-def _same_form(g, fold, gtype=None):
+def _same_form(g, fold, gtypes):
     """``fold`` over the decoded form of ``g``, returned in ``g``'s own
     form: a decoded geometry for decoded input, WKB bytes (the decoded
-    result through geo_encode's encoder) for WKB input."""
+    result through geo_encode's encoder) for WKB input.  ``gtypes``
+    names the geometry types ``fold`` returns: the encoder builds only
+    those arms, and a single type tags the decoded result."""
     d = _dec_of(g)
     if d is not None:
+        gtype = gtypes[0] if len(gtypes) == 1 else None
         return _dec_wrap(_let(d, fold), gtype=gtype)
-    return wrap(_encode(_let(_decode_struct(unwrap(g)), fold)))
+    return wrap(_encode(_let(_decode_struct(unwrap(g)), fold), gtypes))
 
 
 def _is_dec_type(dt) -> bool:
@@ -2532,13 +2469,19 @@ def geo_encode(g):
     each member's (gtype, part-count) pair re-encodes its parts slice
     through the same per-type builders."""
     d = _dec_of(g)
-    return wrap(_encode(d if d is not None else unwrap(g)))
+    if d is None:
+        return wrap(_encode(unwrap(g)))
+    st = _static_gtype_of(g)
+    return wrap(_encode(d, _GTYPES if st is None else (st,)))
 
 
-def _encode(expr):
+def _encode(expr, gtypes=_GTYPES):
     """LE WKB bytes of a decoded-struct expression — geo_encode's
     encoder, also the WKB output of the geometry-returning folds over
-    WKB input (_same_form)."""
+    WKB input (_same_form).  ``gtypes`` names the geometry types
+    ``expr`` can hold; only their arms are built (any other type
+    encodes to NULL, as an unknown type always has), so encoding a
+    known point or polygon does not pay for the whole encoder."""
 
     def part_hex(P):
         vh = _vhex_arr(
@@ -2549,116 +2492,128 @@ def _encode(expr):
             F.aggregate(vh, F.lit(""), lambda a, v: F.concat(a, v)),
         )
 
-    def _hex_of(gt, parts):
+    def _hex_of(gt, parts, gtypes):
         p1 = F.try_element_at(parts, F.lit(1))
-        v1 = F.try_element_at(p1, F.lit(1))
-        v1hex = F.try_element_at(
-            _vhex_arr(F.array(v1["x"]), F.array(v1["y"])), F.lit(1)
-        )
-        pt_hx = F.concat(F.lit("0101000000"), v1hex)
-        line_hx = F.concat(F.lit("0102000000"), part_hex(p1))
-        poly_hx = F.concat(
-            F.lit("0103000000"),
-            _le_hex32(F.size(parts)),
-            F.aggregate(
-                F.transform(parts, part_hex),
-                F.lit(""),
-                lambda a, v: F.concat(a, v),
-            ),
-        )
-        mpt_hx = F.concat(
-            F.lit("0104000000"),
-            _le_hex32(F.size(p1)),
-            F.aggregate(
-                _vhex_arr(
-                    F.transform(p1, lambda p: p["x"]),
-                    F.transform(p1, lambda p: p["y"]),
-                ),
-                F.lit(""),
-                lambda a, v: F.concat(a, F.lit("0101000000"), v),
-            ),
-        )
-        ml_hx = F.concat(
-            F.lit("0105000000"),
-            _le_hex32(F.size(parts)),
-            F.aggregate(
-                F.transform(
-                    parts, lambda P: F.concat(F.lit("0102000000"), part_hex(P))
-                ),
-                F.lit(""),
-                lambda a, v: F.concat(a, v),
-            ),
-        )
-        # multipolygon: fold the flattened separator encoding back into
-        # per-polygon ring groups (flush a POLYGON child at each empty
-        # separator part); a leading/trailing/double separator means a
-        # zero-ring polygon -> NULL (the decoder never emits one)
-        mp0 = F.struct(
-            F.lit("").alias("cur"),
-            F.lit(0).cast("bigint").alias("n"),
-            F.lit("").alias("out"),
-            F.lit(0).cast("bigint").alias("k"),
-            F.lit(True).alias("ok"),
-        )
 
-        def mp_fold_step(a, P):
-            flush = F.struct(
+        def pt_hx():
+            v1 = F.try_element_at(p1, F.lit(1))
+            v1hex = F.try_element_at(
+                _vhex_arr(F.array(v1["x"]), F.array(v1["y"])), F.lit(1)
+            )
+            return F.concat(F.lit("0101000000"), v1hex)
+
+        def line_hx():
+            return F.concat(F.lit("0102000000"), part_hex(p1))
+
+        def poly_hx():
+            return F.concat(
+                F.lit("0103000000"),
+                _le_hex32(F.size(parts)),
+                F.aggregate(
+                    F.transform(parts, part_hex),
+                    F.lit(""),
+                    lambda a, v: F.concat(a, v),
+                ),
+            )
+
+        def mpt_hx():
+            return F.concat(
+                F.lit("0104000000"),
+                _le_hex32(F.size(p1)),
+                F.aggregate(
+                    _vhex_arr(
+                        F.transform(p1, lambda p: p["x"]),
+                        F.transform(p1, lambda p: p["y"]),
+                    ),
+                    F.lit(""),
+                    lambda a, v: F.concat(a, F.lit("0101000000"), v),
+                ),
+            )
+
+        def ml_hx():
+            return F.concat(
+                F.lit("0105000000"),
+                _le_hex32(F.size(parts)),
+                F.aggregate(
+                    F.transform(
+                        parts,
+                        lambda P: F.concat(F.lit("0102000000"), part_hex(P)),
+                    ),
+                    F.lit(""),
+                    lambda a, v: F.concat(a, v),
+                ),
+            )
+
+        def mp_hx():
+            # fold the flattened separator encoding back into
+            # per-polygon ring groups (flush a POLYGON child at each
+            # empty separator part); a leading/trailing/double separator
+            # means a zero-ring polygon -> NULL (the decoder never emits
+            # one)
+            mp0 = F.struct(
                 F.lit("").alias("cur"),
                 F.lit(0).cast("bigint").alias("n"),
-                F.concat(
+                F.lit("").alias("out"),
+                F.lit(0).cast("bigint").alias("k"),
+                F.lit(True).alias("ok"),
+            )
+
+            def mp_fold_step(a, P):
+                flush = F.struct(
+                    F.lit("").alias("cur"),
+                    F.lit(0).cast("bigint").alias("n"),
+                    F.concat(
+                        a["out"],
+                        F.lit("0103000000"),
+                        _le_hex32(a["n"]),
+                        a["cur"],
+                    ).alias("out"),
+                    (a["k"] + 1).alias("k"),
+                    (a["ok"] & (a["n"] >= 1)).alias("ok"),
+                )
+                grow = F.struct(
+                    F.concat(a["cur"], part_hex(P)).alias("cur"),
+                    (a["n"] + 1).alias("n"),
+                    a["out"].alias("out"),
+                    a["k"].alias("k"),
+                    a["ok"].alias("ok"),
+                )
+                return F.when(F.size(P) == 0, flush).otherwise(grow)
+
+            def mp_fin(a):
+                full = F.concat(
+                    F.lit("0106000000"),
+                    _le_hex32(a["k"] + 1),
                     a["out"],
                     F.lit("0103000000"),
                     _le_hex32(a["n"]),
                     a["cur"],
-                ).alias("out"),
-                (a["k"] + 1).alias("k"),
-                (a["ok"] & (a["n"] >= 1)).alias("ok"),
-            )
-            grow = F.struct(
-                F.concat(a["cur"], part_hex(P)).alias("cur"),
-                (a["n"] + 1).alias("n"),
-                a["out"].alias("out"),
-                a["k"].alias("k"),
-                a["ok"].alias("ok"),
-            )
-            return F.when(F.size(P) == 0, flush).otherwise(grow)
-
-        def mp_fin(a):
-            full = F.concat(
-                F.lit("0106000000"),
-                _le_hex32(a["k"] + 1),
-                a["out"],
-                F.lit("0103000000"),
-                _le_hex32(a["n"]),
-                a["cur"],
-            )
-            return (
-                F.when(
-                    F.size(parts) == 0,
-                    F.concat(
-                        F.lit("0106000000"),
-                        _le_hex32(F.lit(0).cast("bigint")),
-                    ),
                 )
-                .when(a["ok"] & (a["n"] >= 1), full)
-                .otherwise(F.lit(None).cast("string"))
-            )
+                return (
+                    F.when(
+                        F.size(parts) == 0,
+                        F.concat(
+                            F.lit("0106000000"),
+                            _le_hex32(F.lit(0).cast("bigint")),
+                        ),
+                    )
+                    .when(a["ok"] & (a["n"] >= 1), full)
+                    .otherwise(F.lit(None).cast("string"))
+                )
 
-        mp_hx = _let(F.aggregate(parts, mp0, mp_fold_step), mp_fin)
+            return _let(F.aggregate(parts, mp0, mp_fold_step), mp_fin)
 
-        return (
-            F.when(gt == 1, pt_hx)
-            .when(gt == 2, line_hx)
-            .when(gt == 3, poly_hx)
-            .when(gt == 4, mpt_hx)
-            .when(gt == 5, ml_hx)
-            .when(gt == 6, mp_hx)
-            .otherwise(F.lit(None).cast("string"))
-        )
+        arms = {1: pt_hx, 2: line_hx, 3: poly_hx, 4: mpt_hx, 5: ml_hx, 6: mp_hx}
+        out, null = None, F.lit(None).cast("string")
+        for k in sorted(arms.keys() & set(gtypes)):
+            arm = arms[k]()
+            out = F.when(gt == k, arm) if out is None else out.when(gt == k, arm)
+        return null if out is None else out.otherwise(null)
 
     def _gc_hex(parts):
         # header-part fold: member i has type hdr[i].x and occupies
-        # hdr[i].y parts starting right after the previous member
+        # hdr[i].y parts starting right after the previous member; a
+        # member is one of types 1-6 (a nested collection is NULL)
         hdr = F.try_element_at(parts, F.lit(1))
         body_parts = F.slice(
             parts, 2, F.greatest(F.size(parts) - 1, F.lit(0))
@@ -2673,7 +2628,7 @@ def _encode(expr):
             np_i = h["y"].cast("int")
             m_hx = _bind(
                 F.slice(body_parts, a["pos"], np_i),
-                lambda mp: _hex_of(h["x"].cast("int"), mp),
+                lambda mp: _hex_of(h["x"].cast("int"), mp, _GTYPES),
             )
             return _bind(
                 m_hx,
@@ -2698,7 +2653,9 @@ def _encode(expr):
 
     def body(s):
         gt, parts = s["gtype"], s["parts"]
-        hx = F.when(gt == 7, _gc_hex(parts)).otherwise(_hex_of(gt, parts))
+        hx = _hex_of(gt, parts, gtypes)
+        if 7 in gtypes:
+            hx = F.when(gt == 7, _gc_hex(parts)).otherwise(hx)
         return F.unhex(hx)
 
     return _let(expr, body)

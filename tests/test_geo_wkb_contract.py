@@ -71,6 +71,11 @@ INPUTS = {
     "collection": struct.pack("<BII", 1, 7, 2) + _pt(1.0, 1.0) + _poly(SQ),
     "ring0": struct.pack("<BII", 1, 3, 1) + struct.pack("<I", 0),
     "no_rings": struct.pack("<BII", 1, 3, 0),
+    # the count word cut off: no count, or part of it (such polygons
+    # once decoded to a polygon with no ring, area 0.0)
+    "no_count": struct.pack("<BI", 1, 3),
+    "count_cut": struct.pack("<BI", 1, 3) + b"\x01\x00",
+    "line_count_cut": struct.pack("<BI", 1, 2) + b"\x02",
     "out_of_domain": _poly(
         [(0.0, 0.0), (2.0**62, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
     ),
@@ -143,6 +148,7 @@ def _answers(con):
 # a struct of four NULL fields).
 EXPECTED = {'big_endian': {},
  'collection': {},
+ 'count_cut': {},
  'empty': {},
  'ewkb': {},
  'holed': {'area': '60.0',
@@ -183,6 +189,8 @@ EXPECTED = {'big_endian': {},
               'intersects_q_g': False,
               'length': '0.0',
               'perimeter': '0.0'},
+ 'line_count_cut': {},
+ 'no_count': {},
  'null': {},
  'out_of_domain': {},
  'point': {'bbox': ('1.0', '1.0', '3.0', '3.0'),
@@ -250,3 +258,17 @@ def test_wkb_contract(answers, name):
     want.update(EXPECTED[name])
     assert answers[name] == want
 
+
+
+def test_decode_cut_count_is_null(con):
+    """geo_decode, the EWKB ingest point, gives NULL for a header cut
+    inside its count word — also for an EWKB header cut inside its
+    SRID word, which is such a header once the SRID is stripped."""
+    from ibis_spark import geo
+
+    ewkb_cut = b"\x01" + struct.pack("<I", 3 | 0x20000000) + b"\xe6\x10"
+    rows = [(k, INPUTS[k]) for k in ("no_count", "count_cut", "line_count_cut")]
+    rows.append(("ewkb_cut", ewkb_cut))
+    t = con.memtable(rows, schema={"k": "string", "g": "binary"})
+    got = {r.k: r.d for r in t.select("k", d=geo.geo_decode(t.g)).df.collect()}
+    assert got == {k: None for k, _ in rows}

@@ -1005,10 +1005,17 @@ class TestGeo:
             assert struct.pack("<d", r.rx) == struct.pack("<d", r.x), r.i
             assert struct.pack("<d", r.ry) == struct.pack("<d", r.y), r.i
 
+    @staticmethod
+    def _det_point(geo, x, y):
+        """The deterministic WKB point: the decoded point through
+        geo_encode's arithmetic array encoder."""
+        return geo.geo_encode(geo.geo_point(x, y, decoded=True))
+
     def test_geo_point_deterministic_encoder_matches(self, con):
-        """deterministic=True (arithmetic bit-encoder, usable in
-        grouping keys) emits byte-identical WKB to the reflect encoder
-        over the whole coordinate domain."""
+        """geo_encode(geo_point(..., decoded=True)) (arithmetic
+        bit-encoder, usable in grouping keys) emits byte-identical WKB
+        to geo_point's reflect encoder over the whole coordinate
+        domain."""
         from ibis_spark import geo
 
         vals = [v for v in self.TRICKY if v == 0.0 or 2.0**-61 <= abs(v) <= 2.0**61]
@@ -1019,12 +1026,12 @@ class TestGeo:
         out = t.select(
             "i",
             a=geo.geo_point(t.x, t.y),
-            b=geo.geo_point(t.x, t.y, deterministic=True),
+            b=self._det_point(geo, t.x, t.y),
         )
         for r in out.df.collect():
-            assert bytes(r.a) == bytes(r.b), r.i
-        # deterministic encode is legal as a grouping key
-        g = t.mutate(p=geo.geo_point(t.x, t.y, deterministic=True))
+            assert r.a is not None and bytes(r.a) == bytes(r.b), r.i
+        # the deterministic encode is legal as a grouping key
+        g = t.mutate(p=self._det_point(geo, t.x, t.y))
         n = g.group_by("p").aggregate(n=g.i.count()).df.count()
         assert n == len(vals)
 
@@ -1107,8 +1114,9 @@ class TestGeo:
 
     def test_geo_codec_fuzz_roundtrip(self, con):
         """Property fuzz: 300 seeded random doubles across the full
-        exponent domain round-trip bit-exactly through BOTH encoders +
-        the decoder, in ONE Spark job."""
+        exponent domain round-trip bit-exactly through BOTH encoders
+        (geo_point's reflect encoder, and geo_encode of a decoded
+        point) + the decoder, in ONE Spark job."""
         import random
         import struct
 
@@ -1127,7 +1135,7 @@ class TestGeo:
         )
         t = t.mutate(
             p=geo.geo_point(t.x, t.y),
-            pd_=geo.geo_point(t.x, t.y, deterministic=True),
+            pd_=self._det_point(geo, t.x, t.y),
         )
         rows = t.select(
             "i", "x", "y",
@@ -1141,9 +1149,10 @@ class TestGeo:
 
     def test_geo_encoders_agree_on_nonfinite(self, con):
         """ADVICE r9: both encoders share ONE domain — NaN/Inf/denormal
-        coordinates yield a NULL point from the reflect encoder too
-        (previously it serialized the non-finite bit pattern into a
-        non-NULL WKB that decoded to NULL downstream)."""
+        coordinates yield a NULL point from the reflect encoder and from
+        geo_encode of a decoded point alike (the reflect encoder once
+        serialized the non-finite bit pattern into a non-NULL WKB that
+        decoded to NULL downstream)."""
         from ibis_spark import geo
 
         vals = [float("nan"), float("inf"), float("-inf"), 2.0**-100, 2.0**70]
@@ -1154,7 +1163,7 @@ class TestGeo:
         rows = t.select(
             "i",
             a=geo.geo_point(t.x, t.x),
-            b=geo.geo_point(t.x, t.x, deterministic=True),
+            b=self._det_point(geo, t.x, t.x),
         ).df.collect()
         for r in rows:
             assert r.a is None and r.b is None, r.i

@@ -15,9 +15,11 @@ parquet (queries read them via the same catalog registration).
 
 Spark's in-memory catalog does not persist table metadata across
 sessions, so the bench re-registers the written directories with
-CREATE TABLE ... CLUSTERED BY ... LOCATION (tools/bench_sf10_bucketed
-registers; _t's "catalog:" scheme reads).  The DDL inputs (schema,
-bucket spec) are recorded in <out_dir>/_bucketed_meta.json.
+CREATE TABLE ... CLUSTERED BY ... LOCATION (bench.py registers any
+SPARK_GRAFT_SF_DIR holding _bucketed_meta.json; _t's "catalog:" scheme
+reads).  The DDL inputs (schema, bucket spec) are recorded in
+<out_dir>/_bucketed_meta.json; bench.py resolves each table's location
+under the directory it is given, so the directory may move.
 
 Usage: python tools/make_sf10_bucketed.py [src_dir] [out_dir]
 """
