@@ -4285,7 +4285,7 @@ def _audio_features_report(spark, sf_dir):
         rows, schema={"k": "int64", "payload": "binary"}
     )
     m = multimodal.attach_media(t, "payload", "audio/wav")
-    out = multimodal.decode_audio(m, fake=False)
+    out = multimodal.decode_audio(m)
     out = out.mutate(
         rms=out["features"][0].cast("float64"),
         centroid=out["features"][3].cast("float64"),

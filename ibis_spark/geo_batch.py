@@ -220,6 +220,10 @@ class _GHDegenerate(Exception):
     """Raised when a boundary incidence is not a transversal crossing."""
 
 
+# edge parameters this close to an endpoint count as an endpoint touch
+_SEG_END_EPS = 1e-9
+
+
 def _seg_cross(p0, p1, q0, q1):
     """Proper-crossing test with parameters.  Returns (t, u) in OPEN
     (0,1) x (0,1) for a transversal interior crossing, None when the
@@ -249,7 +253,10 @@ def _seg_cross(p0, p1, q0, q1):
     u = cross_qp_r / den
     if t < 0.0 or t > 1.0 or u < 0.0 or u > 1.0:
         return None
-    if t == 0.0 or t == 1.0 or u == 0.0 or u == 1.0:
+    # a vertex exactly on the other edge rounds to a parameter a few
+    # ulps off 0 or 1 (t = 0.9999999999999998), so "exact" endpoint
+    # contact is caught within _SEG_END_EPS, not by equality
+    if min(t, 1.0 - t, u, 1.0 - u) <= _SEG_END_EPS:
         raise _GHDegenerate("endpoint touch")
     return t, u
 

@@ -11,13 +11,12 @@ real and tested.
 
 Codecs (round 9): PNG decodes END-TO-END with a stdlib-only decoder
 (``zlib`` inflate + ``struct`` chunk parsing + numpy scanline
-unfiltering — ``_png_decode``), so ``decode_images(..., fake=False)``
-on real PNG bytes emits true width/height and pixel-derived features
+unfiltering — ``_png_decode``), so ``decode_images`` on real PNG bytes emits true width/height and pixel-derived features
 with no third-party imaging library.
 
 Audio (round 12): WAV/PCM decodes END-TO-END via the stdlib ``wave``
 parser + numpy sample conversion (8/16/24/32-bit PCM, any channel
-count), so ``decode_audio(..., fake=False)`` on real WAV bytes emits
+count), so ``decode_audio`` on real WAV bytes emits
 true sample_rate/channels/duration and signal features (rms, peak,
 zero-crossing rate, spectral centroid, log-energy bands via rfft).
 
@@ -32,16 +31,13 @@ width growth and the deferred-clear table cap, global/local palettes,
 interlacing, multi-frame; animated GIFs sample through
 ``sample_frames`` like MJPEG videos.
 
-MP3/OGG audio and libav-class video codecs (H.264 etc.) remain
-honestly stubbed: the container ships no libav, so those payloads
-raise ``NotImplementedError`` at the call site where libav would be
-invoked, and ``fake=True`` substitutes a deterministic hash-derived
-payload with the same schema/shape the real decoder would produce.
+MP3/OGG audio and libav-class video codecs (H.264 etc.) are not
+decoded: no libav is available, so those payloads raise
+``NotImplementedError`` at the call site where libav would be invoked.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct as _struct
 import zlib as _zlib
 from typing import Iterator, Optional
@@ -202,18 +198,10 @@ def _png_resize_nearest(px, tw: int, th: int):
     return px[ys][:, xs]
 
 
-def _fake_decode(payload: bytes, dim: int = _FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for a decoder+feature-extractor: derive
-    ``dim`` floats in [0,1) from the sha256 of the payload."""
-    h = hashlib.sha256(payload or b"").digest()
-    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
-
-
 def decode_images(
     t: Table,
     media_col: str = "media",
     *,
-    fake: bool = False,
     resize: Optional[tuple[int, int]] = None,
     feature_dim: int = _FEATURE_DIM,
 ) -> Table:
@@ -221,8 +209,8 @@ def decode_images(
 
     Runs as ``mapInPandas`` — one Arrow batch at a time per task, so a
     1000-executor cluster decodes embarrassingly parallel with no shuffle.
-    ``fake=True`` uses the deterministic hash decoder (for tests / this
-    container); ``fake=False`` requires PIL and raises otherwise.
+    PNG, baseline JPEG and GIF decode with stdlib + numpy; other formats
+    require PIL and raise NotImplementedError otherwise.
     """
     df = t.df
     out_schema = st.StructType(
@@ -287,36 +275,20 @@ def decode_images(
         except ImportError as e:
             raise NotImplementedError(
                 "image format decoding requires PIL for formats beyond "
-                "PNG and baseline JPEG (both decode via stdlib+numpy); "
-                "pass fake=True for the deterministic stub"
+                "PNG, baseline JPEG and GIF (they decode via stdlib+numpy)"
             ) from e
         raise NotImplementedError("real exotic-format decode path requires PIL")
 
     def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
         for pdf in batches:
             payloads = pdf[media_col].map(
                 lambda m: (m["data"] if isinstance(m, dict) else m) or b""
             )
-            if fake:
-                feats = payloads.map(lambda b: _fake_decode(bytes(b), feature_dim))
-                # deterministic fake dimensions from payload length
-                w = payloads.map(lambda b: 16 + len(bytes(b)) % 64).astype("int32")
-                h = (w // 2).astype("int32")
-                if target is not None:
-                    w = pd.Series(
-                        [target[0]] * len(pdf), index=pdf.index, dtype="int32"
-                    )
-                    h = pd.Series(
-                        [target[1]] * len(pdf), index=pdf.index, dtype="int32"
-                    )
-            else:
-                decoded = payloads.map(_real_one)
-                # nullable Int32: malformed payloads degrade to NULLs
-                w = decoded.map(lambda t: t[0]).astype("Int32")
-                h = decoded.map(lambda t: t[1]).astype("Int32")
-                feats = decoded.map(lambda t: t[2])
+            decoded = payloads.map(_real_one)
+            # nullable Int32: malformed payloads degrade to NULLs
+            w = decoded.map(lambda t: t[0]).astype("Int32")
+            h = decoded.map(lambda t: t[1]).astype("Int32")
+            feats = decoded.map(lambda t: t[2])
             out = pdf.copy()
             out["width"] = w
             out["height"] = h
@@ -986,7 +958,6 @@ def decode_audio(
     t: Table,
     media_col: str = "media",
     *,
-    fake: bool = False,
     bands: int = _WAV_BANDS,
 ) -> Table:
     """Decode audio payloads and emit (sample_rate, channels,
@@ -997,8 +968,7 @@ def decode_audio(
     WAV/PCM payloads decode for REAL (stdlib ``wave`` + numpy — see
     ``_wav_decode``); a malformed WAV degrades that row to NULLs
     instead of failing the task.  Non-WAV audio (MP3/OGG/FLAC) needs
-    libav and raises NotImplementedError unless ``fake=True``, which
-    emits the deterministic hash-derived vector with the same schema."""
+    libav and raises NotImplementedError."""
     df = t.df
     out_schema = st.StructType(
         list(df.schema.fields)
@@ -1025,8 +995,7 @@ def decode_audio(
             return sr, ch, dur, _wav_features(sr, x, bands)
         raise NotImplementedError(
             "non-WAV audio decoding requires an av library (WAV/PCM "
-            "decodes via the stdlib parser); pass fake=True for the "
-            "deterministic stub"
+            "decodes via the stdlib parser)"
         )
 
     def run(batches: Iterator) -> Iterator:
@@ -1034,21 +1003,11 @@ def decode_audio(
             payloads = pdf[media_col].map(
                 lambda m: (m["data"] if isinstance(m, dict) else m) or b""
             )
-            if fake:
-                feats = payloads.map(
-                    lambda b: _fake_decode(bytes(b), 4 + bands)
-                )
-                sr = payloads.map(lambda b: 8000 + len(bytes(b)) % 8) \
-                    .astype("int32")
-                ch = payloads.map(lambda b: 1 + len(bytes(b)) % 2) \
-                    .astype("int32")
-                dur = payloads.map(lambda b: float(len(bytes(b))) / 1000.0)
-            else:
-                decoded = payloads.map(_real_one)
-                sr = decoded.map(lambda r: r[0]).astype("Int32")
-                ch = decoded.map(lambda r: r[1]).astype("Int32")
-                dur = decoded.map(lambda r: r[2])
-                feats = decoded.map(lambda r: r[3])
+            decoded = payloads.map(_real_one)
+            sr = decoded.map(lambda r: r[0]).astype("Int32")
+            ch = decoded.map(lambda r: r[1]).astype("Int32")
+            dur = decoded.map(lambda r: r[2])
+            feats = decoded.map(lambda r: r[3])
             out = pdf.copy()
             out["sample_rate"] = sr
             out["channels"] = ch
@@ -1096,7 +1055,6 @@ def sample_frames(
     media_col: str = "media",
     *,
     every_n: int = 10,
-    fake: bool = False,
 ) -> Table:
     """Explode a video payload into sampled frame rows (frame_idx +
     frame_width/frame_height) — one row per kept frame, Arrow-batched
@@ -1107,8 +1065,7 @@ def sample_frames(
     (``_jpeg_decode``) supplies true frame geometry; every
     ``every_n``-th frame is kept, and a malformed container degrades
     the row to a single NULL-frame row.  Other codecs (H.264 etc.)
-    need libav and raise unless ``fake=True``, which keeps the
-    payload-length-derived stub shape."""
+    need libav and raise NotImplementedError."""
     df = t.df
     out_schema = st.StructType(
         list(df.schema.fields)
@@ -1147,8 +1104,7 @@ def sample_frames(
             ] or [(None, None, None)]
         raise NotImplementedError(
             "real frame sampling beyond MJPEG-in-AVI and animated GIF "
-            "requires an av library; pass fake=True for the "
-            "deterministic stub"
+            "requires an av library"
         )
 
     def run(batches: Iterator) -> Iterator:
@@ -1156,25 +1112,16 @@ def sample_frames(
             payloads = pdf[media_col].map(
                 lambda m: (m["data"] if isinstance(m, dict) else m) or b""
             )
-            if fake:
-                reps = payloads.map(lambda b: max(1, len(bytes(b)) // every_n))
-                out = pdf.loc[pdf.index.repeat(reps)].copy()
-                out["frame_idx"] = [i for r in reps for i in range(r)]
-                out["frame_width"] = None
-                out["frame_height"] = None
-                out["frame_width"] = out["frame_width"].astype("Int32")
-                out["frame_height"] = out["frame_height"].astype("Int32")
-            else:
-                rows = payloads.map(_real_rows)
-                reps = rows.map(len)
-                out = pdf.loc[pdf.index.repeat(reps)].copy()
-                flat = [f for rl in rows for f in rl]
-                out["frame_idx"] = [f[0] for f in flat]
-                out["frame_width"] = [f[1] for f in flat]
-                out["frame_height"] = [f[2] for f in flat]
-                out["frame_idx"] = out["frame_idx"].astype("Int32")
-                out["frame_width"] = out["frame_width"].astype("Int32")
-                out["frame_height"] = out["frame_height"].astype("Int32")
+            rows = payloads.map(_real_rows)
+            reps = rows.map(len)
+            out = pdf.loc[pdf.index.repeat(reps)].copy()
+            flat = [f for rl in rows for f in rl]
+            out["frame_idx"] = [f[0] for f in flat]
+            out["frame_width"] = [f[1] for f in flat]
+            out["frame_height"] = [f[2] for f in flat]
+            out["frame_idx"] = out["frame_idx"].astype("Int32")
+            out["frame_width"] = out["frame_width"].astype("Int32")
+            out["frame_height"] = out["frame_height"].astype("Int32")
             yield out
 
     return Table(df.mapInPandas(run, out_schema))

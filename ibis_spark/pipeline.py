@@ -2126,7 +2126,11 @@ def _validate_merges(merges, sep):
     return out
 
 
-def bpe_encode(col, merges, *, udf_threshold: int = 512):
+# merge lists longer than this take bpe_encode's pandas-UDF path
+_BPE_UDF_THRESHOLD = 512
+
+
+def bpe_encode(col, merges):
     """Exact BPE merge application over the :func:`pretokenize` stream →
     array<string> of BPE tokens per document.
 
@@ -2144,15 +2148,15 @@ def bpe_encode(col, merges, *, udf_threshold: int = 512):
     construction runs in DuckDB (pure RE2 + replace), making the token
     stream itself oracle-checkable.
 
-    Merge lists longer than ``udf_threshold`` switch to an Arrow-batched
-    pandas UDF applying the standard min-rank loop with a rank dict
+    Merge lists longer than ``_BPE_UDF_THRESHOLD`` (512) switch to an
+    Arrow-batched pandas UDF applying the standard min-rank loop with a rank dict
     (equivalent on well-formed lists, validated) — a 50k-rule production
     vocab as one broadcast dict instead of a 50k-deep expression tree.
     """
     S = "\x01"
     merges = _validate_merges(merges, S)
     c = unwrap(col)
-    if len(merges) > int(udf_threshold):
+    if len(merges) > _BPE_UDF_THRESHOLD:
         return _bpe_encode_udf(c, merges)
     cleaned = F.replace(c, F.lit(S), F.lit(""))
     pretoks = F.regexp_extract_all(cleaned, F.lit(_BPE_PRETOKEN_RE), 0)

@@ -225,6 +225,37 @@ class TestBatchPointwiseFuzz:
                     )
         assert answered >= 40
 
+    def test_vertex_on_edge_pair_degrades_or_holds_identities(self):
+        """B's edge (6.4,-3)->(5.5,3) passes through A's vertex (5.8,1);
+        in floating point the crossing parameter is 0.9999999999999998,
+        not 1.  Read as a transversal crossing it built wrong rings (a
+        union smaller than B alone); it is an endpoint touch, so each op
+        must degrade to None or satisfy the area identities."""
+        A = [(5.8, 1.0), (-0.146723, 4.675759), (-3.5, 7.5), (-4.0, 4.4),
+             (2.6, -4.06844), (3.9, -3.0), (6.4, -2.1), (7.873074, -3.0)]
+        B = [(5.5, 3.0), (4.401761, 3.0), (2.3, 7.0), (0.1, 8.9),
+             (-6.0, 2.0), (-6.109126, -1.6), (-0.095591, -8.0), (6.4, -3.0)]
+        A, B = A + A[:1], B + B[:1]
+        aa = abs(gb._shoelace(A)) / 2.0
+        ba = abs(gb._shoelace(B)) / 2.0
+        for a, b, a_area, b_area in ((A, B, aa, ba), (B, A, ba, aa)):
+            res = {
+                op: gb.setop(op, (3, [a]), (3, [b]))
+                for op in ("intersection", "difference", "union")
+            }
+            area = {
+                op: None if v is None else _area(v[1]) for op, v in res.items()
+            }
+            ia, ua, da = area["intersection"], area["union"], area["difference"]
+            if ua is not None:
+                assert max(a_area, b_area) - 1e-9 <= ua <= a_area + b_area + 1e-9
+            if da is not None:
+                assert -1e-9 <= da <= a_area + 1e-9
+            if ia is not None and ua is not None:
+                assert ua == pytest.approx(a_area + b_area - ia, rel=1e-9)
+            if ia is not None and da is not None:
+                assert ia + da == pytest.approx(a_area, rel=1e-9)
+
 
 def _poly_wkb(*rings):
     out = struct.pack("<BII", 1, 3, len(rings))
